@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Edge, Neighbor, NeighborList, Similarity}
+import graft.core.{Neighbor, NeighborList, Similarity}
+import graft.core.Checkpoints.{release, truncate}
 
 import scala.collection.mutable
 import scala.util.Random
@@ -53,25 +54,26 @@ private[nnd] final case class FlaggedEdge(src: Long, dst: Long, sim: Double, isN
 
 object NND {
 
+  /** Output schema of a neighbor list, sorted by descending similarity. */
+  private val ListType = "array<struct<id:bigint,similarity:double>>"
+
   /** Reference parameter regime (`/root/reference/README.md:43-48`) plus
+    * the knobs below.
+    *
     * `expansion`: the graph is built internally at k' = ceil(k·expansion)
     * and truncated to k on output. K-expansion is the standard NN-descent
     * quality lever (wider lists → denser neighbor-of-neighbor exploration
     * → faster convergence to a better optimum): on the uniform-random
     * sf0.1 fixture it lifts recall@10 from 0.57 to 0.95 at comparable
-    * wall time. Set expansion = 1.0 for strict reference behavior. */
-  /** `checkpointDir`: when set, per-iteration lineage truncation uses a
+    * wall time. Set expansion = 1.0 for strict reference behavior.
+    *
+    * `checkpointDir`: when set, per-iteration lineage truncation is a
     * DURABLE `checkpoint` to this (DFS) path instead of
-    * `localCheckpoint` — localCheckpoint blocks live on executors and
-    * die with them, which on a real cluster turns one lost executor
-    * into a failed job; the durable form survives executor loss at the
-    * cost of one DFS write per iteration. Two caveats the caller owns:
-    * Spark does not delete reliable checkpoints (retention = clean the
-    * directory after the result is consumed, or run with
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`), and the
-    * checkpoint dir is GLOBAL SparkContext state — concurrent builds in
-    * one session should share a single directory. */
-  /** `pruneAlpha`/`pruneMaxDegree`: when `pruneAlpha` is set, every
+    * `localCheckpoint`, which survives executor loss — see
+    * [[graft.core.Checkpoints.truncate]] for its cost and the two
+    * caveats the caller owns (retention, global checkpoint dir).
+    *
+    * `pruneAlpha`/`pruneMaxDegree`: when `pruneAlpha` is set, every
     * merged neighbor list is occlusion-pruned IN-LOOP with the shared
     * RobustPrune kernel ([[graft.core.Occlusion]]) — DiskANN's
     * construction shape (prune while building, not post-hoc), bounding
@@ -115,163 +117,10 @@ object NND {
     *   finished/isolated rows).
     */
   def buildGraph(input: DataFrame, p: Params = Params()): DataFrame = {
-    require(input.columns.contains("id") && input.columns.contains("features"),
-      s"buildGraph input needs 'id' and 'features' columns; got [${input.columns.mkString(", ")}]")
-    gateParams(p)
-    val spark = input.sparkSession
-    import spark.implicits._
-
-    p.checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    // Durable lineage truncation when a checkpoint dir is configured;
-    // executor-local blocks otherwise (fastest, fine for local mode).
-    def truncate[T](ds: Dataset[T]): Dataset[T] =
-      if (p.checkpointDir.isDefined) ds.checkpoint() else ds.localCheckpoint(true)
-
-    val base = withDefaultCols(input)
-
-    // Persisted pre-partitioned on id: every per-iteration features join
-    // (adjacency build) then reuses this partitioning, so the feature
-    // table itself is never re-shuffled across iterations — only the
-    // narrow id-pair side moves.
-    val nodes = base
-      .filter(!col("finished"))
-      .select(col("id").cast("long").as("id"),
-        col("features").cast("array<float>").as("features"),
-        col("partition").cast("long").as("partition"))
-      .repartition(col("id"))
-      .as[NodeRow]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Per-logical-partition counts: cardinality = number of logical
-    // partitions (small by construction), so a driver map + broadcast is
-    // the right shape even at 100 TB (reference closure-captures the same
-    // map, NND.scala:77-90).
-    val counts: Map[Long, Long] =
-      nodes.groupBy($"partition").count().as[(Long, Long)].collect().toMap
-
-    if (counts.isEmpty) {
-      nodes.unpersist()
-      return base.withColumn("neighbors",
-        lit(null).cast("array<struct<id:bigint,similarity:double>>"))
-    }
-
-    val n = counts.values.sum
-    val bcCounts = spark.sparkContext.broadcast(counts)
-    // Internal build width k' (K-expansion; output truncates to p.k).
-    val k = math.max(p.k, math.ceil(p.k * p.expansion).toInt)
-    val bpi = p.bucketsPerInstance
-    val seed = p.seed
-    val maxBuckets =
-      math.max(1L, math.ceil(counts.values.max.toDouble * bpi / (2.0 * k)).toLong)
-
-    // --- Blocked random init (reference G1, NND.scala:87-102) ---
-    // [[drawBuckets]] bucket choice, namespaced per logical partition so
-    // initial candidates never cross partitions.
-    val bucketed: Dataset[BucketedNode] = nodes.flatMap { nd =>
-      drawBuckets(seed, nd.features, bcCounts.value(nd.partition), bpi, k)
-        .map(b => BucketedNode(maxBuckets * nd.partition + b, nd.id, nd.features, nd.partition))
-        .toSeq
-    }
-
-    val initCands: Dataset[Cand] = bucketed
-      .groupByKey(_.bucket)
-      .flatMapGroups { (bucket, it) =>
-        val members = dedupById(it)
-        members.iterator.flatMap(nd => inBucketDraws(seed, bucket, nd, members, k))
-      }
-
-    var graph: Dataset[FlaggedList] = truncate(
-      mergeTopK(initCands, k)
-        .map(g => FlaggedList(g._1, g._2.neighbors, g._2.old.map(!_))))
-    // The checkpoint BACKING `graph`: from iteration 1 on, `graph` is a
-    // map over the checkpointed `merged`, and release() must target the
-    // checkpointed frame itself (the bridge frees only a checkpoint-
-    // ROOTED plan — walking arbitrary plans for LogicalRDD leaves would
-    // also free checkpoints a caller composed in).
-    var graphCk: Dataset[_] = graph
-    // In-loop occlusion prune (DiskANN construction shape): the init
-    // lists are pruned like every later merge, so degree is bounded
-    // from the first adjacency join on.
-    p.pruneAlpha.foreach { a =>
-      val pruned = truncate(pruneFlagged(graph, nodes, a, p.pruneMaxDegree))
-      release(graphCk)
-      graph = pruned
-      graphCk = pruned
-    }
-
-    // --- Iterative refinement (reference C1 loop, NND.scala:111-263) ---
-    var finished = false
-    var iter = 0
-    while (!finished && iter < p.maxIterations) {
-      val edges: Dataset[FlaggedEdge] =
-        graph.flatMap(nl => nl.neighbors.iterator.zip(nl.isNew.iterator)
-          .map { case (nb, fresh) => FlaggedEdge(nl.id, nb.id, nb.similarity, fresh) })
-
-      val sampledRev = sampleReverse(edges, p.sampleRate, iter, seed)
-
-      // Adjacency set Av = Bv ∪ sample(Rv) (reference G4): the ONLY place
-      // features are shuffled — one narrow-ids union, one join against the
-      // node table (reference sends features point-to-point in G3/G4; a
-      // shuffle join on dst is the relational equivalent). `nodes` is
-      // persisted pre-partitioned on id, so only the narrow id-pairs side
-      // shuffles here — features leave their partition exactly once, into
-      // the adjacency grouping. Duplicate (src,dst) pairs (a node both a
-      // forward and sampled-reverse neighbor) are deduped inside the
-      // per-group array instead of a dedicated dropDuplicates shuffle.
-      val adj: Dataset[AdjRow] = edges.select($"src", $"dst", $"isNew")
-        .union(sampledRev)
-        .join(nodes.toDF().select($"id".as("dst"), $"features", $"partition"), "dst")
-        .select($"src", $"dst", $"features", $"partition", $"isNew")
-        .as[AdjRow]
-
-      val pairCands: Dataset[Cand] = adj
-        .groupByKey(_.src)
-        .flatMapGroups((_, it) => localJoinPairs(it))
-
-      val oldCands: Dataset[Cand] = edges.map(e => Cand(e.src, e.dst, e.sim, isOld = true))
-
-      // Merge with map-side partial aggregation; the per-node updated
-      // count rides in the merged result, so convergence needs no
-      // accumulator (deterministic under task retries).
-      val merged = truncate(mergeTopK(pairCands.unionByName(oldCands), k))
-      val updates = merged.map(_._2.updated.toLong).toDF("u")
-        .agg(coalesce(sum($"u"), lit(0L))).as[Long].head()
-      // Update counting happens on the UNPRUNED merge (an entry that
-      // made the top-k' is an update whether or not occlusion then
-      // drops it) — the δ semantics stay identical to the unpruned
-      // path; the Params scaladoc documents the re-proposal caveat.
-      val (newGraph, newCk): (Dataset[FlaggedList], Dataset[_]) =
-        p.pruneAlpha match {
-          case None =>
-            (merged.map(g => FlaggedList(g._1, g._2.neighbors, g._2.old.map(!_))),
-              merged)
-          case Some(a) =>
-            val pruned = truncate(pruneFlagged(
-              merged.map(g => FlaggedList(g._1, g._2.neighbors, g._2.old.map(!_))),
-              nodes, a, p.pruneMaxDegree))
-            release(merged) // pruned is materialized; merged has no other reader
-            (pruned, pruned)
-        }
-
-      val prev = graphCk
-      graph = newGraph
-      graphCk = newCk
-      release(prev)
-      iter += 1
-
-      // δ-convergence (Dong et al.; reference C3, NND.scala:259-262).
-      val ratio = updates.toDouble / (k.toDouble * n.toDouble)
-      if (ratio <= p.earlyTermination) finished = true
-    }
-
-    // Final reassembly (reference J1 left outer join, NND.scala:274-278).
-    val result = base.join(
-      graph.map(nl => NeighborList(nl.id, nl.neighbors.take(p.k)))
-        .toDF().select($"id", $"neighbors"),
-      Seq("id"), "left_outer")
-
-    nodes.unpersist()
-    result
+    val (base, nodes) = nodeTable(input, p, "buildGraph")
+    val counts = partitionCounts(nodes)
+    reassemble(base, nodes, p, Option.when(counts.nonEmpty)(
+      refineLoop(nodes, None, initLists(nodes, counts, None, p), counts.values.sum, p)))
   }
 
   /** Incrementally extend an existing K-NN graph with NEW points —
@@ -288,7 +137,8 @@ object NND {
     *   ignored; null-neighbor rows treated as new). Lists may be the
     *   truncated k-wide output of a previous build — they re-expand to
     *   the internal k' during refinement.
-    * @return same shape as [[buildGraph]] over the full input.
+    * @return same shape as [[buildGraph]] over the full input — and,
+    *   when every input point is new, exactly [[buildGraph]]'s graph.
     *
     * Cost model — what the carve-outs bound, and what they can't:
     *  - init draws come from the ~|new|·bpi buckets containing a new
@@ -331,50 +181,15 @@ object NND {
     * a new point. EdgeCasesSpec pins the retire-between-build-and-
     * update case. */
   def updateGraph(input: DataFrame, existing: DataFrame, p: Params = Params()): DataFrame = {
-    require(input.columns.contains("id") && input.columns.contains("features"),
-      s"updateGraph input needs 'id' and 'features' columns; got [${input.columns.mkString(", ")}]")
     require(existing.columns.contains("id") && existing.columns.contains("neighbors"),
       s"existing graph needs 'id' and 'neighbors' columns; got [${existing.columns.mkString(", ")}]")
-    // Same parameter gate as buildGraph: k = 0 would otherwise run all
-    // iterations on empty candidate lists (0/0 convergence ratio is
-    // NaN, never <= earlyTermination) and return garbage silently.
-    gateParams(p)
-    val spark = input.sparkSession
-    import spark.implicits._
-
-    p.checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def truncate[T](ds: Dataset[T]): Dataset[T] =
-      if (p.checkpointDir.isDefined) ds.checkpoint() else ds.localCheckpoint(true)
-
-    val base = withDefaultCols(input)
-    val nodes = base
-      .filter(!col("finished"))
-      .select(col("id").cast("long").as("id"),
-        col("features").cast("array<float>").as("features"),
-        col("partition").cast("long").as("partition"))
-      .repartition(col("id"))
-      .as[NodeRow]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val counts: Map[Long, Long] =
-      nodes.groupBy($"partition").count().as[(Long, Long)].collect().toMap
-    if (counts.isEmpty) {
-      nodes.unpersist()
-      return base.withColumn("neighbors",
-        lit(null).cast("array<struct<id:bigint,similarity:double>>"))
-    }
-    val bcCounts = spark.sparkContext.broadcast(counts)
-    val k = math.max(p.k, math.ceil(p.k * p.expansion).toInt)
-    val bpi = p.bucketsPerInstance
-    val seed = p.seed
-    val maxBuckets =
-      math.max(1L, math.ceil(counts.values.max.toDouble * bpi / (2.0 * k)).toLong)
+    import input.sparkSession.implicits._
+    val (base, nodes) = nodeTable(input, p, "updateGraph")
+    val counts = partitionCounts(nodes)
+    if (counts.isEmpty) return reassemble(base, nodes, p, None)
 
     // Prior lists (all-old flags); ids absent here are the increment.
-    val priorListsRaw = existing
-      .select(col("id").cast("long").as("id"),
-        col("neighbors").cast("array<struct<id:bigint,similarity:double>>").as("neighbors"))
-      .filter(col("neighbors").isNotNull)
+    val priorListsRaw = listsOf(existing)
 
     // Finished-point purge: a point marked `finished` in THIS update's
     // input gets null neighbors for its own row (it is absent from
@@ -422,85 +237,45 @@ object NND {
         truncate(priorListsRaw
           .join(purgeAffected, Seq("id"), "left_anti")
           .unionByName(purgedLists)
-          .as[NeighborList])
+          .as[NeighborList], p.checkpointDir)
       }
-    var stable: Dataset[FlaggedList] = truncate(
-      priorLists.toDF().join(nodes.toDF().select($"id"), Seq("id"), "left_semi")
-        .as[NeighborList]
-        .map(nl => FlaggedList(nl.id, nl.neighbors, nl.neighbors.map(_ => false))))
     val newIds = nodes.toDF().select($"id")
       .join(priorLists.toDF().select($"id"), Seq("id"), "left_anti")
-    val newCount = math.max(1L, newIds.count())
-
-    // Bucket init, increment-restricted: all nodes bucket map-side, but
-    // only buckets holding >= 1 new point shuffle; only new members draw.
-    val bucketedAll = nodes.toDF()
-      .join(newIds.withColumn("is_new", lit(true)), Seq("id"), "left_outer")
-      .withColumn("is_new", coalesce($"is_new", lit(false)))
-      .as[(Long, Array[Float], Long, Boolean)]
-      .flatMap { case (id, features, partition, isNewNode) =>
-        drawBuckets(seed, features, bcCounts.value(partition), bpi, k)
-          .map(b => (maxBuckets * partition + b, id, features, partition, isNewNode))
-          .toSeq
-      }
-      .toDF("bucket", "id", "features", "partition", "is_new")
-    val seedBuckets = bucketedAll.filter($"is_new").select($"bucket").distinct()
-    val initCands: Dataset[Cand] = bucketedAll
-      .join(seedBuckets, Seq("bucket"), "left_semi")
-      .as[(Long, Long, Array[Float], Long, Boolean)]
-      .groupByKey(_._1)
-      .flatMapGroups { (bucket, it) =>
-        val rows = it.toArray
-        val seen = new mutable.LongMap[(BucketedNode, Boolean)]()
-        rows.foreach { case (b, id, f, part, fresh) =>
-          if (!seen.contains(id)) seen.update(id, (BucketedNode(b, id, f, part), fresh))
-        }
-        val members = seen.values.toArray.sortBy(_._1.id)
-        // Plain member array hoisted out of the per-node loop so the
-        // draw indices hit the same ordering buildGraph draws from.
-        val plain = members.map(_._1)
-        members.iterator.filter(_._2).flatMap { case (nd, _) =>
-          inBucketDraws(seed, bucket, nd, plain, k)
-        }
-      }
-
-    val active: Dataset[FlaggedList] = truncate(
-      mergeTopK(initCands, k)
-        .map(g => FlaggedList(g._1, g._2.neighbors, g._2.old.map(!_))))
-    val allLists = refineLoop(nodes, stable, active, k, newCount, p)
-    val result = base.join(
-      allLists.map(nl => NeighborList(nl.id, nl.neighbors.take(p.k)))
-        .toDF().select($"id", $"neighbors"),
-      Seq("id"), "left_outer")
-    nodes.unpersist()
-    result
+    val newCount = newIds.count()
+    // All new: no prior list survives, so nothing is stable and the
+    // update is a build (dense body, every bucket, every member draws).
+    val increment = if (newCount == counts.values.sum) None else Some(newIds)
+    val stable = increment.map(_ => allOld(
+      priorLists.toDF().join(nodes.toDF().select($"id"), Seq("id"), "left_semi"), p))
+    reassemble(base, nodes, p, Some(refineLoop(nodes, stable,
+      initLists(nodes, counts, increment, p), math.max(1L, newCount), p)))
   }
 
-  /** The NN-descent absorption loop shared by [[updateGraph]] and
-    * [[consolidateGraph]] — iterate forward/reverse edge exchange +
-    * incremental local join + carved-out top-k re-merge until the
-    * update count δ (normalized by k·`newCount`) hits the early-
-    * termination floor. Only the INITIALIZATION differs between the
-    * two callers (bucket draws for a genuine increment; the appended
-    * lists' own fresh flags for consolidation); the loop body is the
-    * one the reference's iteration implements (`/root/reference/src/
-    * main/scala/com/github/fvictorio/nnd/NND.scala:117-247`),
-    * restricted to groups holding a fresh member.
-    *
-    * @param stable0 lists with NO fresh entries (pass through until a
-    *   candidate targets them); `active0` lists holding >= 1 fresh
-    *   entry, truncated by the caller. Returns stable ∪ active after
-    *   convergence — internal k'-wide lists, flags dropped by the
-    *   caller's final projection. */
+  /** The one NN-descent loop (reference `/root/reference/src/main/scala/
+    * com/github/fvictorio/nnd/NND.scala:111-263`) of all three entry
+    * points — iterate forward/reverse edge exchange + incremental local
+    * join + top-k re-merge until the update count δ (normalized by
+    * k·`normCount`) hits the early-termination floor. `stable0` selects
+    * one of two bodies:
+    *  - `None`, no list has converged (a build, or an update whose input
+    *    is all new): the DENSE body. Edges flow from every list, every
+    *    adjacency group local-joins, one merge re-emits every list.
+    *  - `Some(stable)`, a converged set exists (an update of a prior
+    *    graph, a consolidation): the CARVE-OUT body. Stable lists pass
+    *    through until a candidate targets them; edges flow only from
+    *    `active0`'s lists (those holding >= 1 fresh entry), only groups
+    *    with a new member local-join, only nodes that received
+    *    candidates re-merge, and untouched actives retire to stable.
+    * Returns stable ∪ active after convergence — internal k'-wide
+    * lists, flags dropped by [[reassemble]]. */
   private def refineLoop(
       nodes: Dataset[NodeRow],
-      stable0: Dataset[FlaggedList],
+      stable0: Option[Dataset[FlaggedList]],
       active0: Dataset[FlaggedList],
-      k: Int,
-      newCount: Long,
+      normCount: Long,
       p: Params): Dataset[FlaggedList] = {
-    val spark = nodes.sparkSession
-    import spark.implicits._
+    import nodes.sparkSession.implicits._
+    val k = buildWidth(p)
     // A §3.2 Bloom pre-filter on the features probe side of the
     // adjacency join was IMPLEMENTED AND MEASURED here in round 18
     // (VERDICT r17 next-round #1), then removed on the evidence: in
@@ -513,135 +288,148 @@ object NND {
     // scale_r18_nnd_{before,after}.json); in the saturated regime the
     // destination set IS ~the corpus and any such filter drops
     // nothing. See OPTIMIZATION_r18.md §6 for the full adjudication.
-    def truncate[T](ds: Dataset[T]): Dataset[T] =
-      if (p.checkpointDir.isDefined) ds.checkpoint() else ds.localCheckpoint(true)
-    val seed = p.seed
+    // Likewise measured and rejected: one body for every caller, the
+    // carve-out body with an EMPTY stable set. Same graph, but on a
+    // build every list is active, so the carve-outs (activeSrcs
+    // semi-join, pairCands checkpoint, target semi/anti joins, stable
+    // rebuild) only add work: perfbench build seed 1 (4 vCPUs, N = 4000)
+    // went 7.67 → 16.59 s wall and 127.8 → 129.7 MB shuffle, same graph
+    // digest. Hence `stable0` selects the body from the input.
+    // In-loop occlusion prune (DiskANN construction shape): the init
+    // lists are pruned like every later merge, so degree is bounded
+    // from the first adjacency join on. Stable lists from `existing`
+    // pass as-is (a pruned prior build's lists re-prune to themselves
+    // — Occlusion is idempotent). Returns the lists with the checkpoint
+    // BACKING them: from iteration 1 on, `active` is a map over the
+    // checkpointed `merged`, and release() must target the checkpointed
+    // frame itself (the bridge frees only a checkpoint-ROOTED plan —
+    // walking arbitrary plans for LogicalRDD leaves would also free
+    // checkpoints a caller composed in).
+    def pruned(lists: Dataset[FlaggedList], ck: Dataset[_]): (Dataset[FlaggedList], Dataset[_]) =
+      p.pruneAlpha match {
+        case None => (lists, ck)
+        case Some(a) =>
+          val pr = truncate(pruneFlagged(lists, nodes, a, p.pruneMaxDegree), p.checkpointDir)
+          release(ck) // pr is materialized; ck has no other reader
+          (pr, pr)
+      }
     var stable = stable0
-    var active = active0
-    // Checkpoint backing `active` (buildGraph's graphCk pattern): from
-    // iteration 1 on, `active` is a map over the checkpointed `merged`;
-    // release() targets the checkpointed frame itself.
-    var activeCk: Dataset[_] = active
-    // In-loop prune, buildGraph's placement: merged/init ACTIVE lists
-    // prune; stable lists from `existing` pass as-is (a pruned prior
-    // build's lists re-prune to themselves — Occlusion is idempotent —
-    // so update-from-empty-equals-build holds).
-    p.pruneAlpha.foreach { a =>
-      val pruned = truncate(pruneFlagged(active, nodes, a, p.pruneMaxDegree))
-      release(activeCk)
-      active = pruned
-      activeCk = pruned
-    }
+    var (active, activeCk) = pruned(active0, active0)
 
     var finished = false
     var iter = 0
     while (!finished && iter < p.maxIterations) {
-      // Forward edges from ACTIVE lists only — new entries can only
-      // live there; converged old<->old structure stays at rest.
+      // Forward edges from ACTIVE lists only (all, in the dense body) —
+      // new entries can only live there; converged old<->old stays put.
       val edges: Dataset[FlaggedEdge] =
         active.flatMap(nl => nl.neighbors.iterator.zip(nl.isNew.iterator)
           .map { case (nb, fresh) => FlaggedEdge(nl.id, nb.id, nb.similarity, fresh) })
+      val adjInput = edges.toDF().select($"src", $"dst", $"isNew")
+        .union(sampleReverse(edges, p.sampleRate, iter, p.seed))
 
-      val sampledRev = sampleReverse(edges, p.sampleRate, iter, seed)
-
-      // Only adjacency groups with a NEW member generate pairs; carve
-      // them out before the features join so untouched groups cost
-      // nothing.
-      // No forced broadcast hints on the carve-out sets: they are
-      // increment-sized for a small daily append (AQE broadcasts them on
-      // its own) but O(N) when the increment is the whole corpus — a
-      // broadcast() hint there would OOM the driver instead of falling
-      // back to a shuffle join.
-      val adjInput = edges.toDF().select($"src", $"dst", $"isNew").union(sampledRev)
-      val activeSrcs = adjInput.filter($"isNew").select($"src").distinct()
-      // Dong et al.'s old[v] half of the incremental join: a STABLE
-      // node that just received a new reverse edge must bring its own
-      // current list into its adjacency group as old-flagged members,
-      // or the group is a singleton {new point} — no pairs, the new
-      // point never meets the neighborhood it landed in, and a sparse
-      // append (the documented daily-append case, down to ONE point)
-      // silently keeps nothing but its random init draws while no old
-      // node ever gains an edge to it. Active lists already re-emit
-      // their old halves via `edges`; this is the stable carve-out's
-      // missing counterpart, and it stays cascade-sized: only lists of
-      // srcs that actually received a new member are pulled in.
-      val stableOldEdges = stable.toDF()
-        .join(activeSrcs.select($"src".as("id")), Seq("id"), "left_semi")
-        .as[FlaggedList]
-        .flatMap(nl => nl.neighbors.iterator.map(nb => (nl.id, nb.id, false)))
-        .toDF("src", "dst", "isNew")
-      val adj: Dataset[AdjRow] = adjInput
-        .union(stableOldEdges)
-        .join(activeSrcs, Seq("src"), "left_semi")
+      // Adjacency set Av = Bv ∪ sample(Rv) (reference G4): the ONLY place
+      // features are shuffled — one narrow-ids union, one join against the
+      // node table (reference sends features point-to-point in G3/G4; a
+      // shuffle join on dst is the relational equivalent). `nodes` is
+      // persisted pre-partitioned on id, so only the narrow id-pairs side
+      // shuffles here — features leave their partition exactly once, into
+      // the adjacency grouping. Duplicate (src,dst) pairs (a node both a
+      // forward and sampled-reverse neighbor) are deduped inside the
+      // per-group array instead of a dedicated dropDuplicates shuffle.
+      def localJoin(adj: DataFrame): Dataset[Cand] = adj
         .join(nodes.toDF().select($"id".as("dst"), $"features", $"partition"), "dst")
         .select($"src", $"dst", $"features", $"partition", $"isNew")
         .as[AdjRow]
-
-      val pairCandsRaw: Dataset[Cand] = adj
         .groupByKey(_.src)
         .flatMapGroups((_, it) => localJoinPairs(it))
 
-      // The O(|Av|²) local join is the iteration's dominant compute and
-      // feeds THREE consumers (merge input, targets for the carve-outs,
-      // and — via targets — the stable/retired rebuild in a separate
-      // job); materialize it once instead of re-running the similarity
-      // loop per consumer (cross-action exchange reuse does not exist).
-      val pairCands = truncate(pairCandsRaw)
+      // Merge with map-side partial aggregation; the per-node updated
+      // count rides in the merged result, so convergence needs no
+      // accumulator (deterministic under task retries).
+      val (merged, retiredCks): (Dataset[(Long, TopKResult)], Seq[Dataset[_]]) = stable match {
+        case None =>
+          val oldCands = edges.map(e => Cand(e.src, e.dst, e.sim, isOld = true))
+          (truncate(mergeTopK(localJoin(adjInput).unionByName(oldCands), k), p.checkpointDir),
+            Nil)
+        case Some(st) =>
+          // Only adjacency groups with a NEW member generate pairs; carve
+          // them out before the features join so untouched groups cost
+          // nothing.
+          // No forced broadcast hints on the carve-out sets: they are
+          // increment-sized for a small daily append (AQE broadcasts them on
+          // its own) but O(N) when the increment is the whole corpus — a
+          // broadcast() hint there would OOM the driver instead of falling
+          // back to a shuffle join.
+          val activeSrcs = adjInput.filter($"isNew").select($"src").distinct()
+          // Dong et al.'s old[v] half of the incremental join: a STABLE
+          // node that just received a new reverse edge must bring its own
+          // current list into its adjacency group as old-flagged members,
+          // or the group is a singleton {new point} — no pairs, the new
+          // point never meets the neighborhood it landed in, and a sparse
+          // append (the documented daily-append case, down to ONE point)
+          // silently keeps nothing but its random init draws while no old
+          // node ever gains an edge to it. Active lists already re-emit
+          // their old halves via `edges`; this is the stable carve-out's
+          // missing counterpart, and it stays cascade-sized: only lists of
+          // srcs that actually received a new member are pulled in.
+          val stableOldEdges = st.toDF()
+            .join(activeSrcs.select($"src".as("id")), Seq("id"), "left_semi")
+            .as[FlaggedList]
+            .flatMap(nl => nl.neighbors.iterator.map(nb => (nl.id, nb.id, false)))
+            .toDF("src", "dst", "isNew")
 
-      // Re-merge ONLY nodes that received candidates; everyone else's
-      // list is carried untouched via semi/anti joins on the
-      // (typically increment-sized) target set.
-      val targets = pairCands.toDF().select($"src".as("id")).distinct()
-      val touchedOld = stable.toDF().join(targets, Seq("id"), "left_semi")
-        .as[FlaggedList]
-        .unionByName(active.toDF().join(targets, Seq("id"), "left_semi")
-          .as[FlaggedList])
-      val oldCands: Dataset[Cand] = touchedOld.flatMap(nl =>
-        nl.neighbors.iterator.map(nb => Cand(nl.id, nb.id, nb.similarity, isOld = true)))
+          // The O(|Av|²) local join is the iteration's dominant compute and
+          // feeds THREE consumers (merge input, targets for the carve-outs,
+          // and — via targets — the stable/retired rebuild in a separate
+          // job); materialize it once instead of re-running the similarity
+          // loop per consumer (cross-action exchange reuse does not exist).
+          val pairCands = truncate(localJoin(adjInput
+            .union(stableOldEdges)
+            .join(activeSrcs, Seq("src"), "left_semi")), p.checkpointDir)
 
-      // Untouched actives have been fully exploited — retire to stable
-      // with flags dropped; stable loses any node the merge re-emitted.
-      val retired = active.toDF().join(targets, Seq("id"), "left_anti")
-        .as[FlaggedList]
-        .map(nl => FlaggedList(nl.id, nl.neighbors, nl.neighbors.map(_ => false)))
-      val prevStable = stable
-      val prevActive = activeCk
-      // The merge and the stable-set rebuild read only the ALREADY
-      // materialized pairCands/stable/active checkpoints and are
-      // independent of each other — overlap their truncation jobs
-      // (guide §2.6; per-frame contents unchanged).
-      val (merged, newStable) = graft.core.Par.pair(
-        truncate(mergeTopK(pairCands.unionByName(oldCands), k)),
-        truncate(
-          stable.toDF().join(targets, Seq("id"), "left_anti").as[FlaggedList]
-            .unionByName(retired)))
+          // Re-merge ONLY nodes that received candidates; everyone else's
+          // list is carried untouched via semi/anti joins on the
+          // (typically increment-sized) target set.
+          val targets = pairCands.toDF().select($"src".as("id")).distinct()
+          def byTargets(lists: Dataset[FlaggedList], how: String): Dataset[FlaggedList] =
+            lists.toDF().join(targets, Seq("id"), how).as[FlaggedList]
+          val oldCands: Dataset[Cand] =
+            byTargets(st, "left_semi").unionByName(byTargets(active, "left_semi"))
+              .flatMap(nl => nl.neighbors.iterator
+                .map(nb => Cand(nl.id, nb.id, nb.similarity, isOld = true)))
+
+          // Untouched actives have been fully exploited — retire to stable
+          // with flags dropped; stable loses any node the merge re-emitted.
+          val retired = byTargets(active, "left_anti")
+            .map(nl => FlaggedList(nl.id, nl.neighbors, nl.neighbors.map(_ => false)))
+          // The merge and the stable-set rebuild read only the ALREADY
+          // materialized pairCands/stable/active checkpoints and are
+          // independent of each other — overlap their truncation jobs
+          // (guide §2.6; per-frame contents unchanged).
+          val (m, newStable) = graft.core.Par.pair(
+            truncate(mergeTopK(pairCands.unionByName(oldCands), k), p.checkpointDir),
+            truncate(byTargets(st, "left_anti").unionByName(retired), p.checkpointDir))
+          stable = Some(newStable)
+          (m, Seq(st, pairCands))
+      }
       val updates = merged.map(_._2.updated.toLong).toDF("u")
         .agg(coalesce(sum($"u"), lit(0L))).as[Long].head()
-      stable = newStable
-      val (newActive, newActiveCk): (Dataset[FlaggedList], Dataset[_]) =
-        p.pruneAlpha match {
-          case None =>
-            (merged.map(g => FlaggedList(g._1, g._2.neighbors, g._2.old.map(!_))),
-              merged)
-          case Some(a) =>
-            val pruned = truncate(pruneFlagged(
-              merged.map(g => FlaggedList(g._1, g._2.neighbors, g._2.old.map(!_))),
-              nodes, a, p.pruneMaxDegree))
-            release(merged)
-            (pruned, pruned)
-        }
+      // Update counting happens on the UNPRUNED merge (an entry that
+      // made the top-k' is an update whether or not occlusion then
+      // drops it) — the δ semantics stay identical to the unpruned
+      // path; the Params scaladoc documents the re-proposal caveat.
+      val prevActive = activeCk
+      val (newActive, newActiveCk) = pruned(merged.map(flagged), merged)
       active = newActive
       activeCk = newActiveCk
-      release(prevStable)
-      release(prevActive)
-      release(pairCands)
+      (prevActive +: retiredCks).foreach(release)
       iter += 1
 
-      val ratio = updates.toDouble / (k.toDouble * newCount.toDouble)
-      if (ratio <= p.earlyTermination) finished = true
+      // δ-convergence (Dong et al.; reference C3, NND.scala:259-262).
+      finished = updates.toDouble / (k.toDouble * normCount.toDouble) <= p.earlyTermination
     }
 
-    stable.unionByName(active)
+    stable.fold(active)(_.unionByName(active))
   }
 
   /** Consolidation refinement of an APPENDED graph — the scheduled
@@ -673,51 +461,26 @@ object NND {
     */
   def consolidateGraph(input: DataFrame, appended: DataFrame,
       freshIds: DataFrame, p: Params = Params()): DataFrame = {
-    require(input.columns.contains("id") && input.columns.contains("features"),
-      s"consolidateGraph input needs 'id' and 'features' columns; got [${input.columns.mkString(", ")}]")
     require(appended.columns.contains("id") && appended.columns.contains("neighbors"),
       s"appended graph needs 'id' and 'neighbors' columns; got [${appended.columns.mkString(", ")}]")
-    gateParams(p)
-    val spark = input.sparkSession
-    import spark.implicits._
-    p.checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-    def truncate[T](ds: Dataset[T]): Dataset[T] =
-      if (p.checkpointDir.isDefined) ds.checkpoint() else ds.localCheckpoint(true)
-
-    val base = withDefaultCols(input)
-    val nodes = base
-      .filter(!col("finished"))
-      .select(col("id").cast("long").as("id"),
-        col("features").cast("array<float>").as("features"),
-        col("partition").cast("long").as("partition"))
-      .repartition(col("id"))
-      .as[NodeRow]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val k = math.max(p.k, math.ceil(p.k * p.expansion).toInt)
+    import input.sparkSession.implicits._
+    val (base, nodes) = nodeTable(input, p, "consolidateGraph")
     val fresh = freshIds.select(col("id").cast("long").as("id"))
     val newCount = math.max(1L, fresh.count())
 
-    val lists = appended
-      .select(col("id").cast("long").as("id"),
-        col("neighbors").cast("array<struct<id:bigint,similarity:double>>").as("neighbors"))
-      .filter(col("neighbors").isNotNull)
+    val lists = listsOf(appended)
 
     // Carve-out before any wide work: a list is ACTIVE iff its owner
     // is in the batch or it holds an entry referencing the batch (a
     // reverse-patch arrival). The membership probe explodes ONLY the
     // narrow (id, nb.id) projection; every other list passes to
     // stable with all-old flags and is never regrouped.
-    val narrowEdges = lists.select(col("id"), explode(col("neighbors.id")).as("nbid"))
-    val activeIds = narrowEdges
+    val activeIds = lists.select(col("id"), explode(col("neighbors.id")).as("nbid"))
       .join(fresh.select(col("id").as("nbid")), Seq("nbid"), "left_semi")
       .select("id").distinct()
       .unionByName(lists.select("id").join(fresh, Seq("id"), "left_semi"))
       .distinct()
-    val stable0: Dataset[FlaggedList] = truncate(
-      lists.join(activeIds, Seq("id"), "left_anti")
-        .as[NeighborList]
-        .map(nl => FlaggedList(nl.id, nl.neighbors, nl.neighbors.map(_ => false))))
+    val stable0 = allOld(lists.join(activeIds, Seq("id"), "left_anti"), p)
 
     // Per-entry fresh flags for the active lists, order-preserving
     // (posexplode + sort-by-pos regroup keeps the stored
@@ -737,13 +500,121 @@ object NND {
         .mapGroups { (id, it) =>
           val rows = it.toArray.sortBy(_._2)
           FlaggedList(id, rows.map(_._3).toIndexedSeq, rows.map(_._4).toIndexedSeq)
-        })
+        },
+      p.checkpointDir)
 
-    val allLists = refineLoop(nodes, stable0, active0, k, newCount, p)
-    val result = base.join(
-      allLists.map(nl => NeighborList(nl.id, nl.neighbors.take(p.k)))
-        .toDF().select($"id", $"neighbors"),
-      Seq("id"), "left_outer")
+    reassemble(base, nodes, p,
+      Some(refineLoop(nodes, Some(stable0), active0, newCount, p)))
+  }
+
+  /** Shared prologue: input checks, `base` (optional columns defaulted)
+    * and the node table of unfinished rows, persisted pre-partitioned on
+    * id: every per-iteration features join (adjacency build) then reuses
+    * this partitioning, so the feature table itself is never re-shuffled
+    * across iterations — only the narrow id-pair side moves. */
+  private def nodeTable(input: DataFrame, p: Params,
+      caller: String): (DataFrame, Dataset[NodeRow]) = {
+    require(input.columns.contains("id") && input.columns.contains("features"),
+      s"$caller input needs 'id' and 'features' columns; got [${input.columns.mkString(", ")}]")
+    gateParams(p)
+    import input.sparkSession.implicits._
+    var base = input
+    if (!base.columns.contains("partition")) base = base.withColumn("partition", lit(0L))
+    if (!base.columns.contains("finished")) base = base.withColumn("finished", lit(false))
+    val nodes = base
+      .filter(!col("finished"))
+      .select(col("id").cast("long").as("id"),
+        col("features").cast("array<float>").as("features"),
+        col("partition").cast("long").as("partition"))
+      .repartition(col("id"))
+      .as[NodeRow]
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    (base, nodes)
+  }
+
+  /** A graph's non-null (id, neighbors) lists in the output schema. */
+  private def listsOf(graph: DataFrame): DataFrame = graph
+    .select(col("id").cast("long").as("id"), col("neighbors").cast(ListType).as("neighbors"))
+    .filter(col("neighbors").isNotNull)
+
+  /** Per-logical-partition counts: cardinality = number of logical
+    * partitions (small by construction), so a driver map + broadcast is
+    * the right shape even at 100 TB (reference closure-captures the same
+    * map, NND.scala:77-90). Empty when no row is left to graph. */
+  private def partitionCounts(nodes: Dataset[NodeRow]): Map[Long, Long] = {
+    import nodes.sparkSession.implicits._
+    nodes.groupBy($"partition").count().as[(Long, Long)].collect().toMap
+  }
+
+  /** Lists with no fresh entry (the stable set), truncated. */
+  private def allOld(lists: DataFrame, p: Params): Dataset[FlaggedList] = {
+    import lists.sparkSession.implicits._
+    truncate(lists.as[NeighborList]
+      .map(nl => FlaggedList(nl.id, nl.neighbors, nl.neighbors.map(_ => false))), p.checkpointDir)
+  }
+
+  /** Internal build width k' (K-expansion; output truncates to p.k). */
+  private def buildWidth(p: Params): Int =
+    math.max(p.k, math.ceil(p.k * p.expansion).toInt)
+
+  /** Blocked random init (reference G1, NND.scala:87-102): [[drawBuckets]]
+    * buckets, namespaced per logical partition so initial candidates
+    * never cross partitions, then [[bucketDraws]]. With no prior graph
+    * (`newIds = None`) every member draws; otherwise all nodes bucket
+    * map-side, but only buckets holding >= 1 new point shuffle (the
+    * seed-bucket semi-join) and only new members draw. */
+  private def initLists(nodes: Dataset[NodeRow], counts: Map[Long, Long],
+      newIds: Option[DataFrame], p: Params): Dataset[FlaggedList] = {
+    import nodes.sparkSession.implicits._
+    val k = buildWidth(p)
+    val bcCounts = nodes.sparkSession.sparkContext.broadcast(counts)
+    val maxBuckets =
+      math.max(1L, math.ceil(counts.values.max.toDouble * p.bucketsPerInstance / (2.0 * k)).toLong)
+    // A function value: a local def called from closures would capture `NND`.
+    val buckets = (features: Array[Float], partition: Long) =>
+      drawBuckets(p.seed, features, bcCounts.value(partition), p.bucketsPerInstance, k)
+        .map(b => maxBuckets * partition + b)
+
+    val initCands: Dataset[Cand] = newIds match {
+      case None =>
+        nodes.flatMap(nd => buckets(nd.features, nd.partition)
+            .map(b => BucketedNode(b, nd.id, nd.features, nd.partition)).toSeq)
+          .groupByKey(_.bucket)
+          .flatMapGroups((bucket, it) => bucketDraws(p.seed, bucket, it.map(nd => (nd, true)), k))
+      case Some(ids) =>
+        val bucketedAll = nodes.toDF()
+          .join(ids.withColumn("is_new", lit(true)), Seq("id"), "left_outer")
+          .withColumn("is_new", coalesce($"is_new", lit(false)))
+          .as[(Long, Array[Float], Long, Boolean)]
+          .flatMap { case (id, features, partition, isNewNode) =>
+            buckets(features, partition).map(b => (b, id, features, partition, isNewNode)).toSeq
+          }
+          .toDF("bucket", "id", "features", "partition", "is_new")
+        val seedBuckets = bucketedAll.filter($"is_new").select($"bucket").distinct()
+        bucketedAll
+          .join(seedBuckets, Seq("bucket"), "left_semi")
+          .as[(Long, Long, Array[Float], Long, Boolean)]
+          .groupByKey(_._1)
+          .flatMapGroups((bucket, it) => bucketDraws(p.seed, bucket, it.map {
+            case (b, id, f, part, fresh) => (BucketedNode(b, id, f, part), fresh)
+          }, k))
+    }
+    truncate(mergeTopK(initCands, k).map(flagged), p.checkpointDir)
+  }
+
+  /** Final reassembly (reference J1 left outer join, NND.scala:274-278),
+    * lists truncated to k; all-null when `lists` is None (nothing left
+    * to graph). Unpersists the node table. */
+  private def reassemble(base: DataFrame, nodes: Dataset[NodeRow], p: Params,
+      lists: Option[Dataset[FlaggedList]]): DataFrame = {
+    import base.sparkSession.implicits._
+    val result = lists match {
+      case None => base.withColumn("neighbors", lit(null).cast(ListType))
+      case Some(l) => base.join(
+        l.map(nl => NeighborList(nl.id, nl.neighbors.take(p.k)))
+          .toDF().select($"id", $"neighbors"),
+        Seq("id"), "left_outer")
+    }
     nodes.unpersist()
     result
   }
@@ -759,29 +630,15 @@ object NND {
     cands.groupByKey(_.src).agg(new TopKAggregator(k).toColumn)
   }
 
-  private def dedupById(it: Iterator[BucketedNode]): Array[BucketedNode] = {
-    val seen = new mutable.LongMap[BucketedNode]()
-    it.foreach(n => if (!seen.contains(n.id)) seen.update(n.id, n))
-    seen.values.toArray.sortBy(_.id)
-  }
+  /** A merged list as loop state: entries that were not old are new. */
+  private def flagged(g: (Long, TopKResult)): FlaggedList =
+    FlaggedList(g._1, g._2.neighbors, g._2.old.map(!_))
 
-  private def dedupByDst(it: Iterator[AdjRow]): Array[AdjRow] = {
-    // a node present both as forward and sampled-reverse neighbor keeps
-    // the NEW flag if either copy is new (Dong et al.'s new-set priority)
-    val seen = new mutable.LongMap[AdjRow]()
-    it.foreach { r =>
-      seen.get(r.dst) match {
-        case None => seen.update(r.dst, r)
-        case Some(prev) if r.isNew && !prev.isNew => seen.update(r.dst, r)
-        case _ =>
-      }
-    }
-    seen.values.toArray.sortBy(_.dst)
-  }
-
-  /** Parameter gate shared by [[buildGraph]] and [[updateGraph]] — one
-    * definition so the two entry points cannot drift on what they
-    * reject. */
+  /** Parameter gate shared by [[buildGraph]], [[updateGraph]] and
+    * [[consolidateGraph]] — one definition so the three entry points
+    * cannot drift on what they reject. k = 0 would otherwise run all
+    * iterations on empty candidate lists (0/0 convergence ratio is
+    * NaN, never <= earlyTermination) and return garbage silently. */
   private def gateParams(p: Params): Unit = {
     require(p.k > 0, s"k must be positive, got ${p.k}")
     require(p.sampleRate > 0, s"sampleRate must be positive, got ${p.sampleRate}")
@@ -798,9 +655,9 @@ object NND {
     * node table + the shared bounded RobustPrune kernel per group —
     * exactly [[graft.ops.GraphSearch.pruneGraph]]'s shape, but carrying
     * the new/old flags through so the incremental local join still
-    * distinguishes fresh entries. Shared by build and update so the
-    * update-from-empty-equals-build contract holds (the kernel is
-    * idempotent on its own output — see [[graft.core.Occlusion]]).
+    * distinguishes fresh entries. The kernel is idempotent on its own
+    * output (see [[graft.core.Occlusion]]), so a pruned prior graph's
+    * stable lists need no re-prune.
     *
     * PRECONDITION (row preservation): every input list must be
     * nonempty and every neighbor id must resolve in `nodes` — an
@@ -836,34 +693,22 @@ object NND {
       }
   }
 
-  /** Default the optional input columns (`partition`, `finished`) —
-    * shared input normalization of both entry points. */
-  private def withDefaultCols(input: DataFrame): DataFrame = {
-    var df = input
-    if (!df.columns.contains("partition")) df = df.withColumn("partition", lit(0L))
-    if (!df.columns.contains("finished")) df = df.withColumn("finished", lit(false))
-    df
-  }
-
-  /** Reverse-edge ρ-sample (reference G2+G3, `NND.scala:116-169`),
-    * shared by build and update so the xxhash64(src, dst, iter, seed)
-    * keep-recipe stays bit-identical between them (the
-    * update-from-empty-equals-build contract depends on it). Each node
-    * keeps a deterministic ~ceil(ρ·|Rv|) (min 1) subset of its incoming
-    * edges. At ρ >= 1 (the reference default regime) the sample is the
-    * whole reverse set and nothing extra runs. At ρ < 1 the draw is a
-    * count-conditioned hash filter: one narrow partial aggregation
-    * computes (|Rv|, min-hash) per dst, then a hash-mod threshold keeps
-    * each edge with probability ceil(ρ·|Rv|)/|Rv| and the min-hash edge
-    * unconditionally (the >= 1 floor). Unlike a row_number window this
-    * needs NO per-iteration full sort of the edge table — at scale the
-    * sort, not the shuffle, is the cost. The subset size is ~Binomial
-    * around ceil(ρ·|Rv|) rather than exact; NN-descent's ρ-sample is
-    * itself a random subsample (Dong et al. §2.3), so expected-size
-    * sampling preserves the algorithm (recall bar held in NNDSpec at
-    * ρ = 0.5). Reverse edges inherit the forward edge's new/old flag
-    * (Dong et al.: new'[v] includes sampled reverse-new, old'[v]
-    * reverse-old). */
+  /** Reverse-edge ρ-sample (reference G2+G3, `NND.scala:116-169`), keyed by
+    * xxhash64(src, dst, iter, seed). Each node keeps a deterministic
+    * ~ceil(ρ·|Rv|) (min 1) subset of its incoming edges. At ρ >= 1 (the
+    * reference default regime) the sample is the whole reverse set and
+    * nothing extra runs. At ρ < 1 the draw is a count-conditioned hash
+    * filter: one narrow partial aggregation computes (|Rv|, min-hash) per
+    * dst, then a hash-mod threshold keeps each edge with probability
+    * ceil(ρ·|Rv|)/|Rv| and the min-hash edge unconditionally (the >= 1
+    * floor). Unlike a row_number window this needs NO per-iteration full
+    * sort of the edge table — at scale the sort, not the shuffle, is the
+    * cost. The subset size is ~Binomial around ceil(ρ·|Rv|) rather than
+    * exact; NN-descent's ρ-sample is itself a random subsample (Dong et al.
+    * §2.3), so expected-size sampling preserves the algorithm (recall bar
+    * held in NNDSpec at ρ = 0.5). Reverse edges inherit the forward edge's
+    * new/old flag (Dong et al.: new'[v] includes sampled reverse-new,
+    * old'[v] reverse-old). */
   private def sampleReverse(edges: Dataset[FlaggedEdge], rate: Double,
       iter: Int, seed: Long): DataFrame = {
     import edges.sparkSession.implicits._
@@ -881,15 +726,25 @@ object NND {
     }
   }
 
-  /** Incremental local join over one adjacency group (reference G5 +
-    * B flags, `NND.scala:199-242`; Dong et al. §2.3), shared by build
-    * and update: within Av, every ordered pair (u, p) with at least one
-    * NEW member becomes a candidate edge u→p. Old-old pairs were
-    * already evaluated the iteration both entries arrived, so skipping
-    * them loses nothing — and as the graph converges the per-iteration
-    * pair count decays toward zero instead of staying |Av|² forever. */
+  /** Incremental local join over one adjacency group (reference G5 + B
+    * flags, `NND.scala:199-242`; Dong et al. §2.3): within Av, every
+    * ordered pair (u, p) with at least one NEW member becomes a candidate
+    * edge u→p. Old-old pairs were already evaluated the iteration both
+    * entries arrived, so skipping them loses nothing — and as the graph
+    * converges the per-iteration pair count decays toward zero instead of
+    * staying |Av|² forever. */
   private def localJoinPairs(it: Iterator[AdjRow]): Iterator[Cand] = {
-    val a = dedupByDst(it)
+    // a node present both as forward and sampled-reverse neighbor keeps
+    // the NEW flag if either copy is new (Dong et al.'s new-set priority)
+    val seen = new mutable.LongMap[AdjRow]()
+    it.foreach { r =>
+      seen.get(r.dst) match {
+        case None => seen.update(r.dst, r)
+        case Some(prev) if r.isNew && !prev.isNew => seen.update(r.dst, r)
+        case _ =>
+      }
+    }
+    val a = seen.values.toArray.sortBy(_.dst)
     val out = new mutable.ArrayBuffer[Cand]()
     var i = 0
     while (i < a.length) {
@@ -909,7 +764,7 @@ object NND {
   }
 
   /** Deterministic per-node bucket choice seeded by the feature hash
-    * (reference F4, `NND.scala:88-89`), shared by build and update.
+    * (reference F4, `NND.scala:88-89`).
     * O(bpi) distinct-draw per node (NOT the reference's full
     * Fisher-Yates over all nb bucket ids, `NND.scala:91`, which is
     * O(nodes-per-partition) work and garbage PER NODE — quadratic total
@@ -927,32 +782,26 @@ object NND {
     picks.iterator
   }
 
-  /** K random in-bucket draws with replacement, self excluded
-    * (reference `NND.scala:98-99`) — seeded per (bucket, node), shared
-    * by build and update so init draws are bit-identical between
-    * them. */
-  private def inBucketDraws(seed: Long, bucket: Long, nd: BucketedNode,
-      members: Array[BucketedNode], k: Int): Iterator[Cand] = {
-    val r = new Random(mix(seed, bucket, nd.id))
-    Iterator.tabulate(k)(_ => members(r.nextInt(members.length)))
-      .filter(_.id != nd.id)
-      .map(c => Cand(nd.id, c.id,
-        Similarity.partitionGated(nd.features, nd.partition, c.features, c.partition),
-        isOld = false))
+  /** One bucket's init candidates. Members, each flagged whether it
+    * draws, are deduped by id (first copy wins) and ordered by id —
+    * the order the draw indices address. Each drawing member then takes
+    * K random in-bucket draws with replacement, self excluded
+    * (reference `NND.scala:98-99`), seeded per (bucket, node). */
+  private def bucketDraws(seed: Long, bucket: Long,
+      it: Iterator[(BucketedNode, Boolean)], k: Int): Iterator[Cand] = {
+    val seen = new mutable.LongMap[(BucketedNode, Boolean)]()
+    it.foreach(m => if (!seen.contains(m._1.id)) seen.update(m._1.id, m))
+    val members = seen.values.toArray.sortBy(_._1.id)
+    val plain = members.map(_._1)
+    members.iterator.collect { case (nd, true) => nd }.flatMap { nd =>
+      val r = new Random(mix(seed, bucket, nd.id))
+      Iterator.tabulate(k)(_ => plain(r.nextInt(plain.length)))
+        .filter(_.id != nd.id)
+        .map(c => Cand(nd.id, c.id,
+          Similarity.partitionGated(nd.features, nd.partition, c.features, c.partition),
+          isOld = false))
+    }
   }
-
-  /** Release a retired per-iteration table: the CacheManager path
-    * (`unpersist`, for persisted plans) plus the localCheckpoint block
-    * store (which `Dataset.unpersist` never reaches — without the
-    * second call every iteration's checkpoint blocks would stay
-    * resident until driver GC; a no-op for reliable `checkpointDir`
-    * checkpoints, whose files are the caller's retention). Callers
-    * must pass the checkpoint-ROOTED frame itself (graphCk/activeCk
-    * track it when the loop variable is a map over the checkpoint) —
-    * the bridge deliberately ignores checkpoints buried in derived
-    * plans. */
-  private def release(ds: Dataset[_]): Unit =
-    graft.core.Checkpoints.release(ds)
 
   /** splitmix64-style mix for per-(bucket,node) deterministic seeds. */
   private def mix(a: Long, b: Long, c: Long): Long = {

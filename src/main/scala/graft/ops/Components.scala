@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints.truncate
+
 /** Distributed connected components over an edge list — the clustering
   * step a dedup pipeline needs to turn near-duplicate PAIRS into
   * duplicate GROUPS (then: keep one canonical document per group).
@@ -37,19 +39,17 @@ object Components {
     *   automatically; isolated nodes form singleton components.
     * @param edges two-column DataFrame of undirected edges (each pair
     *   listed in either direction; duplicates fine).
+    * @param checkpointDir when set, per-round lineage truncation uses
+    *   a DURABLE `checkpoint` (survives executor loss on a real
+    *   cluster) instead of executor-local blocks — see
+    *   [[graft.core.Checkpoints.truncate]].
     * @return (id LONG, component LONG) — component = min id reachable.
     */
-  /** `checkpointDir`: when set, per-round lineage truncation uses a
-    * DURABLE `checkpoint` (survives executor loss on a real cluster)
-    * instead of executor-local blocks. */
   def connectedComponents(
       nodes: DataFrame,
       edges: DataFrame,
       maxIterations: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(nodes.sparkSession.sparkContext.setCheckpointDir)
-    def truncate(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
     val idc = nodes.columns.head
     val Array(uc, vc) = edges.columns.take(2)
     val e0 = edges
@@ -58,13 +58,15 @@ object Components {
     // Symmetric closure, deduped once, checkpointed: reused every round
     // with a stable partitioning instead of re-shuffling raw pairs.
     val both = truncate(
-      e0.union(e0.select(col("v").as("u"), col("u").as("v"))).distinct())
+      e0.union(e0.select(col("v").as("u"), col("u").as("v"))).distinct(),
+      checkpointDir)
 
     var comp = truncate(
       nodes.select(col(idc).cast("long").as("id"))
         .union(both.select(col("u").as("id")))
         .distinct()
-        .withColumn("comp", col("id")))
+        .withColumn("comp", col("id")),
+      checkpointDir)
     var lastSum = checksum(comp)
 
     var it = 0
@@ -79,14 +81,16 @@ object Components {
       // propagate join + neighbor-min aggregation would execute twice
       // per round — doubled work in the O(log d)-round critical path.
       val propagated = truncate(comp.join(nbrMin, Seq("id"), "left_outer")
-        .select(col("id"), least(col("comp"), coalesce(col("nm"), col("comp"))).as("comp")))
+        .select(col("id"), least(col("comp"), coalesce(col("nm"), col("comp"))).as("comp")),
+        checkpointDir)
       // Pointer doubling: comp ← comp(comp). Labels are ids, so the
       // lookup is a self-join; left_outer because a label may already be
       // a component root whose own row maps to itself.
       val compressed = truncate(propagated
         .join(propagated.select(col("id").as("comp"), col("comp").as("cc")),
           Seq("comp"), "left_outer")
-        .select(col("id"), coalesce(col("cc"), col("comp")).as("comp")))
+        .select(col("id"), coalesce(col("cc"), col("comp")).as("comp")),
+        checkpointDir)
       val s = checksum(compressed)
       converged = s == lastSum
       lastSum = s

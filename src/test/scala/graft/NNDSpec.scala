@@ -297,11 +297,20 @@ class NNDSpec extends SparkSpec {
         Option(r.getSeq[Row](1)).map(_.map(n => (n.getLong(0), n.getDouble(1)))))
       .toMap
     val empty = Seq.empty[(Long, Seq[(Long, Double)])].toDF("id", "neighbors")
-    val p = NND.Params(k = K, maxIterations = 2, pruneAlpha = Some(1.0),
-      pruneMaxDegree = 12)
-    assert(lists(NND.updateGraph(embeddings, empty, p)) ==
-      lists(NND.buildGraph(embeddings, p)),
-      "pruned all-new update must reduce to a pruned fresh build")
+    // The second input runs long enough, with degree capped below k,
+    // for lists to stop receiving candidates while others still change.
+    // An update that retired such lists to a stable set would stop
+    // sending their reverse old edges into active adjacency groups and
+    // drift from the build (8 of 500 lists on this fixture).
+    Seq(
+      NND.Params(k = K, maxIterations = 2, pruneAlpha = Some(1.0), pruneMaxDegree = 12),
+      NND.Params(k = K, maxIterations = 8, pruneAlpha = Some(1.0), pruneMaxDegree = 6,
+        earlyTermination = 0.0)
+    ).foreach { p =>
+      assert(lists(NND.updateGraph(embeddings, empty, p)) ==
+        lists(NND.buildGraph(embeddings, p)),
+        s"pruned all-new update must reduce to a pruned fresh build under $p")
+    }
   }
 
   test("incremental updateGraph is deterministic") {
