@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.AtomicLong
@@ -10,9 +9,6 @@ import java.util.concurrent.atomic.AtomicLong
   * (total + max single-stage shuffle-write bytes — the reference's
   * headline metric, `/root/reference/README.md:74-77`). */
 object Bench {
-
-  private val curShuffle = new AtomicLong(0L)
-  private val maxStageShuffle = new AtomicLong(0L)
 
   /** Cumulative JVM GC milliseconds — the telemetry that ATTRIBUTES a
     * wall-time outlier (round 12: n02 samples spread 9.4-40.8 s in one
@@ -57,14 +53,6 @@ object Bench {
     }
     ts.foreach(_.join())
     (System.nanoTime() - t0) / 1000000
-  }
-
-  private class ShuffleListener extends SparkListener {
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-      curShuffle.addAndGet(w)
-      maxStageShuffle.updateAndGet(m => math.max(m, w))
-    }
   }
 
   /** THE measurement session config, shared with
@@ -460,7 +448,6 @@ object Bench {
     // after minutes of measurement.
     val nHeavy = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY", "10").toInt
     val spark = session()
-    spark.sparkContext.addSparkListener(new ShuffleListener)
     warmUp(spark, sfDir)
     val gcBase = gcMillis()
 
@@ -594,21 +581,20 @@ object Bench {
     // recorded like gc_ms, destined for the durable bench.json.
     val probeLog = scala.collection.mutable.LinkedHashMap[String, Long]()
     val pass1 = phases.map { case (name, run) =>
-      // Let stage-completed events from the previous query drain.
-      Thread.sleep(150)
       probeLog(name) = hostProbeMillis()
-      curShuffle.set(0L)
-      maxStageShuffle.set(0L)
-      val t0 = System.nanoTime()
       // A crashed phase must record -1, never its time-to-failure: st28
       // broke at sf0.1 for half of round 15 and its "0.28 s" wall read
       // as a speedup instead of a failure (the silent-swallow hole).
-      val ok = try { run(); true } catch { case e: Throwable =>
-        System.err.println(s"[bench] PHASE FAILED $name: $e"); false
+      // The failure is caught inside the metered thunk, so the bytes
+      // the phase shuffled before it failed are still recorded.
+      val m = graft.core.StageMeter.measure(spark) {
+        val t0 = System.nanoTime()
+        try { run(); (System.nanoTime() - t0) / 1e9 }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] PHASE FAILED $name: $e"); -1.0
+        }
       }
-      val secs = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      Thread.sleep(150)
-      (name, secs, curShuffle.get(), maxStageShuffle.get())
+      (name, m.value, m.shuffleBytes, m.maxStageShuffleBytes)
     }
 
     // Median-of-3 on the heaviest phases: in a shared JVM per-query wall

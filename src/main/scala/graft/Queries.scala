@@ -4879,8 +4879,8 @@ object Queries {
     //    metric the lists store). The append leaves it at ~0.78 (no
     //    new<->new edges — each inserted point searched the prior
     //    stack only); consolidation must restore it to fresh-build
-    //    level (~1.0 — ProbeN20: appended 0.778 -> consolidated
-    //    0.999 vs fresh 0.998 at sf0.01).
+    //    level (~1.0 — SURVEY.md round 17: appended 0.778 ->
+    //    consolidated 0.999 vs fresh 0.998 at sf0.01).
     //  - SERVE recall through the consolidated stack vs the SAME
     //    quarter-budget descent over the memoized FRESH full-corpus
     //    stack (s22's), identical tombstones and truth — so the
@@ -5691,8 +5691,8 @@ object Queries {
     // The consolidation's two audited axes, comparators inside the
     // pin: (1) n_adj_new_* — the new cohort's base-layer adjacency
     // recall (the consolidation's product; the append leaves ~0.78,
-    // fresh builds ~1.0 — ProbeN20); (2) n_hits_cons vs n_hits_fresh
-    // — the quarter-budget serve through the consolidated stack vs
+    // fresh builds ~1.0 — SURVEY.md round 17); (2) n_hits_cons vs
+    // n_hits_fresh — the quarter-budget serve through the consolidated stack vs
     // the SAME descent over the memoized fresh s22 stack, identical
     // tombstones and live-corpus truth, so "within margin of fresh"
     // is machine-checked per SF — measured margin: ±1 hit at every

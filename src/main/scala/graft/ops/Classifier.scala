@@ -472,10 +472,8 @@ object Classifier {
     * margin/p column from the current weights, then per-feature
     * fixed-point contributions keyed (class, index). Shuffle bounded
     * by |classes| * (dim+1) keys per partition. */
-  /** The gradient-scan frame alone (analysis/execution split exposed
-    * for the round-18 ProbeIrls measurement tool). */
-  private[graft] def multiGradFrame(feats: DataFrame, classes: Seq[String],
-      w: Seq[Array[Long]], b: Seq[Long], dim: Int): DataFrame = {
+  private def multiGradStats(feats: DataFrame, classes: Seq[String],
+      w: Seq[Array[Long]], b: Seq[Long], dim: Int): Map[(Int, Long), Long] = {
     // One codegen'd explode of the feature list with |classes| SUM
     // AGGREGATES per feature key, replacing the per-class
     // interpreted-lambda struct stream (|classes|x fewer generated
@@ -493,15 +491,11 @@ object Classifier {
     }
     ex.groupBy(col("u.i").as("k"))
       .agg(aggs.head, aggs.tail: _*)
-  }
-
-  private def multiGradStats(feats: DataFrame, classes: Seq[String],
-      w: Seq[Array[Long]], b: Seq[Long], dim: Int): Map[(Int, Long), Long] =
-    multiGradFrame(feats, classes, w, b, dim)
       .collect().flatMap { r =>
         val k = r.getLong(0)
         classes.indices.map(c => (c, k) -> r.getLong(c + 1))
       }.toMap
+  }
 
   /** One-vs-rest multiclass training with the Bohning-Lindsay bounded
     * curvature method: the Newton Hessian is replaced by the uniform

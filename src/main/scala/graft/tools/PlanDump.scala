@@ -53,9 +53,10 @@ object PlanDump {
     recording = true
     run()
     recording = false
-    // Listener callbacks are asynchronous; drain the bus (bounded)
-    // instead of racing it with a fixed sleep (round-17 ADVICE).
-    org.apache.spark.sql.GraftColumnBridge.waitListenerBusEmpty(spark, 30000L)
+    // Listener callbacks are asynchronous; drain the bus before reading
+    // the plans. A drain that times out throws rather than writing a
+    // truncated plan set.
+    org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
 
     import scala.jdk.CollectionConverters._
     val body = plans.asScala.toSeq.mkString("\n")

@@ -1,10 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import java.util.concurrent.atomic.AtomicLong
 
 /** Multi-tier scale rehearsal (VERDICT r14 "Next round" #1): run the
   * heaviest operator KERNELS at two or more data tiers and record the
@@ -34,17 +31,6 @@ import java.util.concurrent.atomic.AtomicLong
   * Output: scale_bench.json (override SPARK_GRAFT_SCALE_OUT).
   */
 object ScaleBench {
-
-  private val curShuffle = new AtomicLong(0L)
-  private val maxStageShuffle = new AtomicLong(0L)
-
-  private class ShuffleListener extends SparkListener {
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val w = sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-      curShuffle.addAndGet(w)
-      maxStageShuffle.updateAndGet(m => math.max(m, w))
-    }
-  }
 
   private def noop(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
@@ -169,7 +155,6 @@ object ScaleBench {
     require(tiers.nonEmpty, "no tiers given")
 
     val spark = graft.Bench.session()
-    spark.sparkContext.addSparkListener(new ShuffleListener)
     graft.Bench.warmUp(spark, tiers.head._2)
 
     // tier label -> (nDocs, nVecs)
@@ -289,22 +274,20 @@ object ScaleBench {
           // the chronological probe readings for outlier attribution.
           val runOrder = scala.collection.mutable.ArrayBuffer[Double]()
           val samples = (1 to reps).flatMap { i =>
-            Thread.sleep(150)
             probes += graft.Bench.hostProbeMillis()
-            curShuffle.set(0L); maxStageShuffle.set(0L)
-            val t0 = System.nanoTime()
-            try {
-              run()
-              okShuffle = curShuffle.get(); okMaxStage = maxStageShuffle.get()
-              val w = (System.nanoTime() - t0) / 1e9
-              runOrder += w
-              Some(w)
+            val m = graft.core.StageMeter.measure(spark) {
+              val t0 = System.nanoTime()
+              try { run(); Some((System.nanoTime() - t0) / 1e9) }
+              catch { case e: Throwable =>
+                System.err.println(s"[scale] $label/$name rep $i failed: $e")
+                None
+              }
             }
-            catch { case e: Throwable =>
-              System.err.println(s"[scale] $label/$name rep $i failed: $e")
-              runOrder += -1.0
-              None
+            if (m.value.isDefined) {
+              okShuffle = m.shuffleBytes; okMaxStage = m.maxStageShuffleBytes
             }
+            runOrder += m.value.getOrElse(-1.0)
+            m.value
           }.sorted
           val med =
             if (samples.isEmpty) -1.0

@@ -30,17 +30,6 @@ object GraftColumnBridge {
     * checkpoint blocks. A no-op on anything whose root is not a local
     * checkpoint (derived plans, reliable file-based checkpoints —
     * whose lifecycle is the caller's checkpoint-dir retention). */
-  /** Block until the shared listener bus has delivered every queued
-    * event (bounded by `timeoutMs`) — the deterministic replacement
-    * for PlanDump's fixed sleep before reading its
-    * QueryExecutionListener's accumulated plans (round-17 ADVICE: a
-    * slow bus could outlive the sleep and silently drop trailing
-    * plans from the evidence dump). `LiveListenerBus.waitUntilEmpty`
-    * is `private[spark]`; this shim is in-package. */
-  def waitListenerBusEmpty(spark: SparkSession, timeoutMs: Long): Unit =
-    try spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
-    catch { case _: Exception => () }
-
   def releaseLocalCheckpoint(ds: Dataset[_]): Unit = ds match {
     case d: classic.Dataset[_] =>
       d.queryExecution.analyzed match {

@@ -151,33 +151,17 @@ class ClassifierSpec extends SparkSpec {
       (2 * i, 1L, s"alpha beta gamma tok$i"),
       (2 * i + 1, 0L, s"alpha beta gamma tok$i")))
       .toDF("doc_id", "y", "text")
-    // AtomicInteger: the count is written on the listener-bus thread
-    // and read here — a plain var permits a stale read that would
-    // silently undercount (round-12 review).
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+    // The meter reads its job count after a bus drain, so the count
+    // is complete when the assertion runs.
+    val m50 = graft.core.StageMeter.measure(spark) {
+      Classifier.trainQuality(sym, $"y" === 1L, dim = 16, iters = 50)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val m50 = Classifier.trainQuality(sym, $"y" === 1L, dim = 16, iters = 50)
-      // Listener events are async; the settle loop waits until the
-      // count is stable for 500 ms (bounded at 5 s) instead of hoping
-      // one fixed sleep outruns a loaded bus.
-      val deadline = System.nanoTime() + 5000000000L
-      var last = -1
-      while (System.nanoTime() < deadline && jobs.get() != last) {
-        last = jobs.get(); Thread.sleep(500)
-      }
-      assert(m50.weightsFp.forall(_ == 0L) && m50.biasFp == 0L,
-        "symmetric corpus must fix at the zero model")
-      // featurize checkpoint + count + ONE stats round (a handful of
-      // jobs); 50 un-stopped rounds would be >= 50 jobs.
-      assert(jobs.get() < 20,
-        s"early stop did not skip the remaining rounds: ${jobs.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(m50.value.weightsFp.forall(_ == 0L) && m50.value.biasFp == 0L,
+      "symmetric corpus must fix at the zero model")
+    // featurize checkpoint + count + ONE stats round (a handful of
+    // jobs); 50 un-stopped rounds would be >= 50 jobs.
+    assert(m50.jobs < 20,
+      s"early stop did not skip the remaining rounds: ${m50.jobs} jobs")
     // On the REAL fixture the stop measurably never fires: the
     // fixed-point trajectory jitters at the rounding floor (round-12
     // measurement, sf0.001 dim=32: per-iteration L1 delta falls to

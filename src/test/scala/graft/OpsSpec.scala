@@ -616,10 +616,11 @@ class OpsSpec extends SparkSpec {
     assert(got(0)._3 == 2.0 && got(1)._3 == 1.0, got.mkString(","))
   }
 
-  // Floors sit just under the tuned operating point (TuneAnn sweep,
-  // sf0.1 isotropic fixture: planes=8/tables=24/radius=1 ≈ 0.95 recall;
-  // ivf 32/16 ≈ 0.85) so a quality collapse can't pass the floor and be
-  // silently re-pinned as the new "correct" value (VERDICT r4 #3).
+  // Floors sit just under the tuned operating point (recorded in the
+  // lshTopK and ivfTopK scaladocs, sf0.1 isotropic fixture:
+  // planes=8/tables=24/radius=1 ≈ 0.95 recall; ivf 32/16 ≈ 0.85) so
+  // a quality collapse can't pass the floor and be silently
+  // re-pinned as the new "correct" value (VERDICT r4 #3).
   test("LSH ANN recall@10 vs brute force >= 0.9") {
     val queries = emb.filter(col("id") < 50)
     val brute = SimilaritySearch.bruteForceTopK(emb, queries, 10)

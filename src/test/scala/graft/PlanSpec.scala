@@ -28,8 +28,7 @@ class PlanSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       body
-      org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(
-        spark.sparkContext, 30000L)
+      org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
       plans.toArray(Array.empty[String]).toSeq
     } finally spark.listenerManager.unregister(listener)
   }

@@ -21,29 +21,11 @@ trait SparkSpec extends AnyFunSuite {
   val sf001 = "/root/testdata/sf0.01"
 
   /** Shuffle-write bytes of `f`'s Spark jobs — the shared harness of
-    * every scale-exhibit test. Deterministic bus drain before
-    * registering and after running (a late stage-completed event must
-    * not leak bytes into another measurement, and a fixed-interval
-    * poll can declare quiet while events are still queued); the
-    * listener is registered fresh per call and removed on exit, so
-    * each measurement is self-contained and measurements compose
-    * sequentially without a shared counter reset. */
+    * every scale-exhibit test, read through the one stage meter
+    * ([[graft.core.StageMeter]]: bus drained before and after, a
+    * listener registered for this call only). */
   def shuffleMeasured[A](f: => A): (A, Long) = {
-    val shuffle = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffle.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    def quiesce(): Unit =
-      org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(
-        spark.sparkContext, 30000L)
-    quiesce()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      quiesce()
-      (r, shuffle.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val m = graft.core.StageMeter.measure(spark)(f)
+    (m.value, m.shuffleBytes)
   }
 }
