@@ -547,33 +547,36 @@ object Bench {
     df.write.mode("overwrite").format("noop").save(); 0L
   }
 
-  /** Eviction hooks for the phases that memoize a session artifact —
-    * run before each rerun sample so a median is over real builds, not
-    * one build and cache hits. Shared with [[graft.tools.TimeQuery]]
-    * (which must evict between its samples for the same reason).
-    * (The rebuilt artifact re-memoizes, so later reruns of n01/n02/s03
-    * still search the prebuilt graph — the declared shape.) */
-  private[graft] def artifactEvict(spark: SparkSession, sfDir: String):
-      Map[String, () => Unit] = Map(
-    "n01_graph_build" -> (() => Queries.evictPrebuilt(spark, sfDir, "n01_graph")),
-    "n02_prior_build" -> (() => Queries.evictPrebuilt(spark, sfDir, "n02_prior")),
-    "n09_prune_build" -> (() => Queries.evictPrunedGraph(spark, sfDir)),
-    "n10_part_build" -> (() => Queries.evictPrebuilt(spark, sfDir, "n10_graph")),
-    "n11_inloop_build" -> (() => Queries.evictPrebuilt(spark, sfDir, "n11_graph")),
-    "s14_index_build" -> (() => Queries.evictIvfIndex(spark, sfDir)),
-    "d15_index_build" -> (() => Queries.evictMinhashIndex(spark, sfDir)),
-    "d26_index_build" -> (() => Queries.evictLineIndex(spark, sfDir)),
-    "j01_bucket_build" -> (() => Queries.evictBucketed(spark, sfDir)),
-    "n18_prior_build" -> (() => {
-      Queries.evictPrebuiltPrefix(spark, sfDir, "n18_layer_")
-      Queries.evictPrebuilt(spark, sfDir, "n18_levels")
-    }),
-    "n18_append_build" -> (() =>
-      Queries.evictPrebuiltPrefix(spark, sfDir, "n18_app_layer_")),
-    "n20_cons_build" -> (() =>
-      Queries.evictPrebuiltPrefix(spark, sfDir, "n20_cons_layer_")),
-    "t31_model_build" -> (() => Queries.evictQualityModel(spark, sfDir)),
-    "t35_vocab_build" -> (() => Queries.evictPrebuilt(spark, sfDir, "unigram_vocab")))
+  /** The session-artifact tag prefixes each memoizing phase builds —
+    * evicted before each rerun sample so a median is over real builds,
+    * not one build and cache hits. Shared with [[graft.tools.TimeQuery]]
+    * and [[graft.tools.PlanDump]] (which must evict between their runs
+    * for the same reason) through [[evictArtifacts]]. (The rebuilt
+    * artifact re-memoizes, so later reruns of n01/n02/s03 still search
+    * the prebuilt graph — the declared shape.) */
+  private[graft] val artifactEvict: Map[String, Seq[String]] = Map(
+    "n01_graph_build" -> Seq("n01_graph"),
+    "n02_prior_build" -> Seq("n02_prior"),
+    "n09_prune_build" -> Seq("pruned_graph"),
+    "n10_part_build" -> Seq("n10_graph"),
+    "n11_inloop_build" -> Seq("n11_graph"),
+    "s14_index_build" -> Seq("ivf_index"),
+    "d15_index_build" -> Seq("minhash_index"),
+    "d26_index_build" -> Seq("line_index"),
+    "j01_bucket_build" -> Seq("bucketed"),
+    "n18_prior_build" -> Seq("n18_layer_", "n18_levels"),
+    "n18_append_build" -> Seq("n18_app_layer_"),
+    "n20_cons_build" -> Seq("n20_cons_layer_"),
+    "t31_model_build" -> Seq("quality_model"),
+    "t35_vocab_build" -> Seq("unigram_vocab"))
+
+  /** Evict (and release) the session artifacts `phase` builds, so its
+    * next run is a real build; a no-op for every other phase. */
+  private[graft] def evictArtifacts(spark: SparkSession, sfDir: String,
+      phase: String): Unit =
+    artifactEvict.getOrElse(phase, Nil).foreach(prefix =>
+      graft.core.SessionCache.evict(spark.sparkContext.applicationId,
+        Queries.artifactTag(sfDir, prefix)))
 
   private def runBench(spark: SparkSession, sfDir: String,
       phases: Seq[(String, () => Long)], nHeavy: Int, gcBase: Long): Unit = {
@@ -606,9 +609,6 @@ object Bench {
     // plan-deterministic, so pass-1 values stand.
     val heavy = pass1.sortBy(-_._2).take(nHeavy).map(_._1).toSet
     val runFn = phases.toMap
-    // Build phases memoize their artifact; evict it before each rerun
-    // (see artifactEvict).
-    val rerunPrep = artifactEvict(spark, sfDir)
     // Forced median-of-5 (with per-sample telemetry): the historical
     // diagnosis pair (st18: 32.9 s in r7, then 3.45 <-> 4.71 s across
     // r8/r9 with its code untouched; n02: 5.70 s in r9 -> 9.41 s in
@@ -637,13 +637,13 @@ object Bench {
     val rerunDetailLog =
       scala.collection.mutable.LinkedHashMap[String, Seq[(Double, Long)]]()
     val results = pass1.map { case r @ (name, t1, sh, mx) =>
-      if (!heavy(name) && !rerunPrep.contains(name) && !forced(name)) r
+      if (!heavy(name) && !artifactEvict.contains(name) && !forced(name)) r
       else {
         // Median-of-3 for heavy queries; median-of-5 for the build
         // phases (the BASELINE-comparable numbers), whose iterative
         // JIT/GC profile still swung ~2× between median-of-3 runs, and
         // for the forced-telemetry set.
-        val extra = if (rerunPrep.contains(name) || forced(name)) 4 else 2
+        val extra = if (artifactEvict.contains(name) || forced(name)) 4 else 2
         // A crashed rerun contributes NO sample (its time-to-crash is
         // not a build time); if every rerun fails, pass 1 stands.
         // Each sample carries its GC delta so a wall outlier is
@@ -656,7 +656,8 @@ object Bench {
         // array alone cannot be re-aligned with chronological probes).
         val runOrder = scala.collection.mutable.ArrayBuffer[(Double, Long)]()
         val reruns = (1 to extra).flatMap { _ =>
-          rerunPrep.get(name).foreach(_())
+          // Build phases memoize their artifact; evict it first.
+          evictArtifacts(spark, sfDir, name)
           probes += hostProbeMillis()
           val g0 = gcMillis()
           val t0 = System.nanoTime()

@@ -1826,47 +1826,20 @@ object Queries {
     * construction, not the declared operation (VERDICT r2 on s03/n02).
     * First touch builds and localCheckpoints (truncating lineage and
     * materializing); later queries in the same session reuse the
-    * materialized plan. Keyed by (applicationId, dir): localCheckpoint
-    * blocks die with their SparkContext, so a fresh session rebuilds
-    * rather than reusing a dead cache entry. */
-  private val prebuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.CompletableFuture[DataFrame]]()
+    * materialized plan. Entries live in [[graft.core.SessionCache]],
+    * scoped by applicationId (localCheckpoint blocks die with their
+    * SparkContext, so a fresh session rebuilds) and tagged
+    * [[artifactTag]]`(dir, tag)`; an evict releases the checkpoint
+    * blocks. */
   private def memo(s: SparkSession, dir: String, tag: String)
-      (build: => DataFrame): DataFrame = {
-    val appId = s.sparkContext.applicationId
-    val key = s"$appId|$dir|$tag"
-    // Entries from dead sessions are unusable (their checkpoint blocks
-    // died with the context) — drop them on the first miss of a new
-    // session so multi-session JVMs (test suites) don't accumulate
-    // dead DataFrame references.
-    if (!prebuilt.containsKey(key))
-      prebuilt.keySet.removeIf(k => !k.startsWith(s"$appId|"))
-    // Claim the key with an incomplete future and BUILD OUTSIDE the
-    // map's bin lock (round-17 ADVICE): memo() builds run concurrently
-    // under Par, and a long Spark build inside computeIfAbsent held its
-    // CHM bin lock — parallel layer keys hashing to one bin silently
-    // serialized, and a memo call nested inside a build lambda risked
-    // CHM's recursive-update IllegalStateException. Waiters block on
-    // the claimed future; a failed build removes its claim (so a retry
-    // rebuilds, computeIfAbsent's semantics) and rethrows everywhere.
-    val fresh = new java.util.concurrent.CompletableFuture[DataFrame]()
-    val existing = prebuilt.putIfAbsent(key, fresh)
-    val fut = if (existing != null) existing else {
-      try fresh.complete(build.localCheckpoint())
-      catch {
-        case e: Throwable =>
-          fresh.completeExceptionally(e)
-          prebuilt.remove(key, fresh)
-          throw e
-      }
-      fresh
-    }
-    try fut.join()
-    catch {
-      case e: java.util.concurrent.CompletionException =>
-        throw Option(e.getCause).getOrElse(e)
-    }
-  }
+      (build: => DataFrame): DataFrame =
+    graft.core.SessionCache.get(s.sparkContext.applicationId,
+      artifactTag(dir, tag))(build.localCheckpoint())(
+      graft.core.Checkpoints.release)
+
+  /** The cache tag of artifact `tag` built over fixture `dir` — the
+    * tag prefix Bench evicts through [[graft.core.SessionCache.evict]]. */
+  private[graft] def artifactTag(dir: String, tag: String): String = s"$dir|$tag"
 
   /** The t26-trained BPE merge rules in rank order, session-memoized
     * (train once, encode many — t26 summarizes them, t28 applies
@@ -1887,85 +1860,32 @@ object Queries {
       .collect().sortBy(_.getString(0))
 
   /** Force the session-memoized unigram vocabulary build — Bench's
-    * timed t35_vocab_build phase (pair with
-    * `evictPrebuilt(_, _, "unigram_vocab")` for rerun medians). */
+    * timed t35_vocab_build phase (it evicts tag "unigram_vocab" through
+    * [[graft.core.SessionCache.evict]] for rerun medians). */
   def unigramVocabBuild(s: SparkSession, dir: String): Unit =
     unigramPieces(s, dir)
-
-  /** Drop one memoized artifact so a re-timed build phase measures a real
-    * build (Bench's median-of-3: without eviction, reruns of
-    * `n01_graph_build`/`n02_prior_build` would time a cache hit). The
-    * next touch rebuilds and re-memoizes. Tags: "n01_graph",
-    * "n02_prior", "brute_truth".
-    *
-    * The superseded entry's localCheckpoint BLOCKS are released
-    * deterministically (round-16 ADVICE): dropping only the reference
-    * leaves the blocks to driver GC + ContextCleaner, and under
-    * Bench's forced median-of-5 rerun cadence (evict + rebuild, x
-    * layers for the stack families) a large-heap driver can
-    * accumulate a session's worth of dead blocks before a collection
-    * ever runs — the leak class searchHierarchical already releases
-    * by hand. */
-  def evictPrebuilt(s: SparkSession, dir: String, tag: String): Unit =
-    Option(prebuilt.remove(s"${s.sparkContext.applicationId}|$dir|$tag"))
-      .foreach(releaseEvicted)
-
-  /** Release a removed memo entry's checkpoint blocks — only when its
-    * build actually COMPLETED: an in-flight build's claim has no
-    * blocks to release yet (and its builder still owns the frame), a
-    * failed build never produced any. */
-  private def releaseEvicted(
-      f: java.util.concurrent.CompletableFuture[DataFrame]): Unit =
-    if (f.isDone && !f.isCompletedExceptionally)
-      org.apache.spark.sql.GraftColumnBridge.releaseLocalCheckpoint(f.join())
-
-  /** Drop every memoized artifact whose tag starts with `prefix` —
-    * for per-layer artifact families whose layer count is data-derived
-    * (the n18 appended stack). Releases each removed entry's
-    * checkpoint blocks like [[evictPrebuilt]]. */
-  def evictPrebuiltPrefix(s: SparkSession, dir: String, prefix: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val p = s"${s.sparkContext.applicationId}|$dir|$prefix"
-    prebuilt.keySet.asScala.filter(_.startsWith(p)).toList.foreach { key =>
-      Option(prebuilt.remove(key)).foreach(releaseEvicted)
-    }
-  }
 
   /** Session-memoized ON-DISK artifacts (the path-valued sibling of
     * [[memo]]): first touch creates a temp directory, runs `build`
     * into it, and registers a JVM-exit cleanup hook; later touches
-    * reuse the path. Keyed by (applicationId, dir, tag) like [[memo]]
-    * — a fresh session gets a fresh build. */
-  private val artifactPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def memoPath(s: SparkSession, dir: String, tag: String)
-      (build: String => Unit): String =
-    artifactPaths.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|$dir|$tag", _ => {
-        val p = java.nio.file.Files.createTempDirectory(s"graft_$tag")
-        sys.addShutdownHook {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(p.toFile)
-        }
-        build(p.toString)
-        p.toString
-      })
-
-  /** Drop the memoized index path so a re-timed `s14_index_build`
-    * measures a real build (same contract as [[evictPrebuilt]]). */
-  def evictIvfIndex(s: SparkSession, dir: String): Unit =
-    artifactPaths.remove(s"${s.sparkContext.applicationId}|$dir|ivf_index")
-
-  /** Evicts the j01 bucketed-table artifact (and drops the catalog
-    * entries) so a Bench rerun measures a real rebuild, not a memo
-    * hit. */
-  def evictBucketed(s: SparkSession, dir: String): Unit = {
-    val h = java.lang.Long.toHexString(dir.hashCode & 0xffffffffL)
-    s.sql(s"DROP TABLE IF EXISTS graft_li_b$h")
-    s.sql(s"DROP TABLE IF EXISTS graft_ord_b$h")
-    artifactPaths.remove(s"${s.sparkContext.applicationId}|$dir|bucketed")
+    * reuse the path. The catalog `tables` the build registers over the
+    * directory are dropped before the build and on evict, which then
+    * deletes the directory. */
+  private def memoPath(s: SparkSession, dir: String, tag: String,
+      tables: String*)(build: String => Unit): String = {
+    def dropTables(): Unit =
+      tables.foreach(tbl => s.sql(s"DROP TABLE IF EXISTS $tbl"))
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
+    }
+    graft.core.SessionCache.get(s.sparkContext.applicationId,
+      artifactTag(dir, tag)) {
+      val p = java.nio.file.Files.createTempDirectory(s"graft_$tag")
+      sys.addShutdownHook(rm(p.toFile))
+      dropTables()
+      build(p.toString)
+      p.toString
+    } { p => dropTables(); rm(new java.io.File(p)) }
   }
 
   /** Bucketed twins of lineitem/orders (8 buckets on the order key,
@@ -2007,8 +1927,7 @@ object Queries {
   def featuresTableName(s: SparkSession, dir: String): String = {
     val h = java.lang.Long.toHexString(dir.hashCode & 0xffffffffL)
     val tbl = s"graft_feat_b$h"
-    memoPath(s, dir, "feat_bucketed") { p =>
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+    memoPath(s, dir, "feat_bucketed", tbl) { p =>
       emb(s, dir)
         .repartition(8, col("id"))
         .write.bucketBy(8, "id").sortBy("id")
@@ -2017,18 +1936,10 @@ object Queries {
     tbl
   }
 
-  def evictFeaturesTable(s: SparkSession, dir: String): Unit = {
-    val h = java.lang.Long.toHexString(dir.hashCode & 0xffffffffL)
-    s.sql(s"DROP TABLE IF EXISTS graft_feat_b$h")
-    artifactPaths.remove(s"${s.sparkContext.applicationId}|$dir|feat_bucketed"): Unit
-  }
-
   def bucketedTableNames(s: SparkSession, dir: String): (String, String) = {
     val h = java.lang.Long.toHexString(dir.hashCode & 0xffffffffL)
     val (li, ord) = (s"graft_li_b$h", s"graft_ord_b$h")
-    memoPath(s, dir, "bucketed") { p =>
-      s.sql(s"DROP TABLE IF EXISTS $li")
-      s.sql(s"DROP TABLE IF EXISTS $ord")
+    memoPath(s, dir, "bucketed", li, ord) { p =>
       t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"))
         .repartition(8, col("l_orderkey"))
         .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
@@ -2096,15 +2007,6 @@ object Queries {
         p, "doc_id", "text")
     }
 
-  /** Drop the memoized d26 line-index path (Bench rerun contract). */
-  def evictLineIndex(s: SparkSession, dir: String): Unit =
-    artifactPaths.remove(s"${s.sparkContext.applicationId}|$dir|line_index")
-
-  /** Drop the memoized d15 index path (Bench rerun contract, as
-    * [[evictIvfIndex]]). */
-  def evictMinhashIndex(s: SparkSession, dir: String): Unit =
-    artifactPaths.remove(s"${s.sparkContext.applicationId}|$dir|minhash_index")
-
   /** The incrementally-grown IVF index artifact (s16): built over the
     * 80% "existing" corpus (ids not divisible by 5 — the n02 prior's
     * split), then the 20% increment APPENDED with the saved centroids
@@ -2143,12 +2045,6 @@ object Queries {
         .write.mode("overwrite").parquet(s"$p/graph")
     }
 
-  /** Drop the memoized pruned-graph path (Bench rerun contract, as
-    * [[evictIvfIndex]]). The underlying n01 graph stays memoized, so a
-    * rerun times the prune+write, not a graph rebuild. */
-  def evictPrunedGraph(s: SparkSession, dir: String): Unit =
-    artifactPaths.remove(s"${s.sparkContext.applicationId}|$dir|pruned_graph")
-
   /** The n10 PARTITIONED serving graph: NND over the two-logical-
     * partition corpus (partition = id % 2) — the reference's
     * partition-gated data model exercised end to end (graph
@@ -2183,11 +2079,6 @@ object Queries {
         p)
     }
 
-  /** Drop the memoized t31 model path (Bench rerun contract, as
-    * [[evictMinhashIndex]]). */
-  def evictQualityModel(s: SparkSession, dir: String): Unit =
-    artifactPaths.remove(s"${s.sparkContext.applicationId}|$dir|quality_model")
-
   /** The loaded t31 model (a 65-row collect off the artifact). */
   def qualityModel(s: SparkSession, dir: String): graft.ops.Classifier.LogisticModel =
     ops.Classifier.loadModel(s, qualityModelPath(s, dir))
@@ -2220,80 +2111,63 @@ object Queries {
       }: Unit
     }
 
-  /** The s22 HNSW layer stack: layer 0 is the memoized n01 serving
+  /** An HNSW layer stack over `corpus`: layer 0 is the memoized `base`
     * graph; each upper layer l is an NND build over the
     * [[ops.GraphSearch.assignLayers]] level >= l subset (fanout 4 —
     * layer sizes N/4^l), the top layer sized >= ~16 nodes. Upper
-    * builds are session-memoized like every serving artifact; their
+    * builds are session-memoized like every serving artifact, tagged
+    * `${stack}_count`, `${stack}_levels` and `${stack}_layer_$l`; their
     * total build cost is the geometric tail Σ N/4^l ≈ N/3 extra
-    * vectors on top of the n01 build. */
-  private def s22LayerGraphs(s: SparkSession, dir: String): Seq[DataFrame] = {
-    val e = emb(s, dir)
+    * vectors on top of the base build. */
+  private def layerGraphs(s: SparkSession, dir: String, stack: String,
+      corpus: DataFrame)(base: => DataFrame): Seq[DataFrame] = {
     val maxLevel = math.max(1,
-      (math.log(memoScalar(s, dir, "s22_count")(e.count()) / 16.0) /
+      (math.log(memoScalar(s, dir, s"${stack}_count")(corpus.count()) / 16.0) /
         math.log(4.0)).toInt)
-    val levels = memo(s, dir, "s22_levels")(
-      graft.ops.GraphSearch.assignLayers(e, maxLevel))
-    val base = knnGraph(s, dir)
-      .filter(col("neighbors").isNotNull).select("id", "neighbors")
+    val levels = memo(s, dir, s"${stack}_levels")(
+      graft.ops.GraphSearch.assignLayers(corpus, maxLevel))
+    val base0 = base.filter(col("neighbors").isNotNull).select("id", "neighbors")
     // Upper-layer NND builds are mutually independent (each over its
     // own level >= l subset) and geometric-tail-sized — overlap their
     // job chains (guide §2.6; the base graph and `levels` are forced
     // above, so the parallel branches touch only their own memo key).
-    base +: graft.core.Par.map((1 to maxLevel).toSeq) { l =>
-      memo(s, dir, s"s22_layer_$l")(
+    base0 +: graft.core.Par.map((1 to maxLevel).toSeq) { l =>
+      memo(s, dir, s"${stack}_layer_$l")(
         graft.nnd.NND.buildGraph(
-          e.join(levels.filter(col("level") >= l).select("id"), "id"),
+          corpus.join(levels.filter(col("level") >= l).select("id"), "id"),
           graft.nnd.NND.Params(k = 8, maxIterations = 3))
           .filter(col("neighbors").isNotNull).select("id", "neighbors"))
     }
   }
+
+  /** The s22 layer stack: [[layerGraphs]] over the full corpus on the
+    * n01 serving graph. */
+  private def s22LayerGraphs(s: SparkSession, dir: String): Seq[DataFrame] =
+    layerGraphs(s, dir, "s22", emb(s, dir))(knnGraph(s, dir))
 
   /** Session-memoized driver scalars (a corpus count is a Spark job;
     * re-running it on every memo-hit call of a layer-stack helper
-    * would make "a full memo hit runs zero jobs" false). Entries from
-    * dead sessions stay correct (same dir, same count), so no
-    * cleanup is needed. */
-  private val scalarMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    * would make "a full memo hit runs zero jobs" false). */
   private def memoScalar(s: SparkSession, dir: String, tag: String)(
       compute: => Long): Long =
-    scalarMemo.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|$dir|$tag", _ => compute)
+    graft.core.SessionCache.get(s.sparkContext.applicationId,
+      artifactTag(dir, tag))(compute)(_ => ())
 
-  /** The n18 PRIOR layer stack: the s22 hierarchy built over the 80%
-    * "existing" corpus (ids not divisible by 5) — layer 0 is the
-    * memoized [[n02Prior]] graph, upper layers are NND builds over its
-    * [[ops.GraphSearch.assignLayers]] level >= l subsets (fanout 4,
-    * same construction as [[s22LayerGraphs]]). This is the resident
-    * serving artifact the day's append arrives AGAINST; n18 then
-    * stack-appends the 20% increment and serves through it. */
-  private def n18LayerGraphs(s: SparkSession, dir: String): Seq[DataFrame] = {
-    val e = emb(s, dir).filter(col("id") % 5 =!= 0)
-    val n = memoScalar(s, dir, "n18_count")(e.count())
-    val maxLevel = math.max(1,
-      (math.log(n / 16.0) / math.log(4.0)).toInt)
-    val levels = memo(s, dir, "n18_levels")(
-      graft.ops.GraphSearch.assignLayers(e, maxLevel))
-    val base = n02Prior(s, dir)
-      .filter(col("neighbors").isNotNull).select("id", "neighbors")
-    // Independent upper-layer builds overlapped — the s22LayerGraphs
-    // rationale (prior graph + levels forced above the parallel
-    // region).
-    base +: graft.core.Par.map((1 to maxLevel).toSeq) { l =>
-      memo(s, dir, s"n18_layer_$l")(
-        graft.nnd.NND.buildGraph(
-          e.join(levels.filter(col("level") >= l).select("id"), "id"),
-          graft.nnd.NND.Params(k = 8, maxIterations = 3))
-          .filter(col("neighbors").isNotNull).select("id", "neighbors"))
-    }
-  }
+  /** The n18 PRIOR layer stack: [[layerGraphs]] over the 80%
+    * "existing" corpus (ids not divisible by 5) on the memoized
+    * [[n02Prior]] graph. This is the resident serving artifact the
+    * day's append arrives AGAINST; n18 then stack-appends the 20%
+    * increment and serves through it. */
+  private def n18LayerGraphs(s: SparkSession, dir: String): Seq[DataFrame] =
+    layerGraphs(s, dir, "n18", emb(s, dir).filter(col("id") % 5 =!= 0))(
+      n02Prior(s, dir))
 
   /** The n18 APPENDED stack — [[n18LayerGraphs]] plus the 20%
     * increment via [[ops.GraphSearch.appendToGraphStack]] — memoized
     * per layer and shared by the n18 serve census, the n19 health
-    * census, and Bench's `n18_append_build` phase (pair with
-    * [[evictPrebuiltPrefix]]("n18_app_layer_") for rerun medians).
+    * census, and Bench's `n18_append_build` phase (it evicts tag
+    * prefix "n18_app_layer_" through [[graft.core.SessionCache.evict]]
+    * for rerun medians).
     * The whole-stack build runs lazily: a full memo hit never
     * re-executes the append's eager per-layer beam searches. */
   private def n18AppendedStack(s: SparkSession, dir: String): Seq[DataFrame] = {
@@ -2348,8 +2222,9 @@ object Queries {
     * appended lists with every batch-incident edge flagged fresh,
     * restoring the new<->new edges the per-point append structurally
     * lacks. Memoized per layer and shared by the n20 serve census and
-    * Bench's `n20_cons_build` phase (pair with
-    * [[evictPrebuiltPrefix]]("n20_cons_layer_") for rerun medians).
+    * Bench's `n20_cons_build` phase (it evicts tag prefix
+    * "n20_cons_layer_" through [[graft.core.SessionCache.evict]] for
+    * rerun medians).
     * Consolidation parameters mirror the append's (k=10 base /
     * upperK=8); 3 absorption iterations — the measured point where
     * the batch's second-order cascade has been absorbed at these

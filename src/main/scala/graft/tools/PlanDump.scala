@@ -49,7 +49,7 @@ object PlanDump {
     // the recorded pass — so the dump shows the phase's OWN plan work,
     // not its prerequisites' (the TimeQuery discipline).
     run()
-    graft.Bench.artifactEvict(spark, sfDir).get(name).foreach(_())
+    graft.Bench.evictArtifacts(spark, sfDir, name)
     recording = true
     run()
     recording = false

@@ -18,7 +18,8 @@ package graft.tools
   * declared queries, benchOnly exhibits, and the `*_build` artifact
   * phases via [[graft.Bench.artifactPhases]]. A build phase's memoized
   * artifact is EVICTED before every timed sample (Bench's own rerun
-  * discipline, via [[graft.Bench.artifactEvict]]), so each sample is a
+  * discipline: [[graft.Bench.evictArtifacts]] releases the phase's
+  * tags through [[graft.core.SessionCache.evict]]), so each sample is a
   * real build, not a cache hit.
   *
   * Args: phase name (required), fixture dir (default sf0.1), sample
@@ -50,9 +51,6 @@ object TimeQuery {
         (graft.SparkEntry.queries.keys ++ graft.Queries.benchOnly.keys ++
           graft.Bench.artifactPhases(spark, sfDir).map(_._1))
           .toSeq.sorted.mkString(", ")))
-    // Evict between samples exactly when Bench would (covers build
-    // phases and the memoizing benchOnly exhibits like j01).
-    val evict = graft.Bench.artifactEvict(spark, sfDir).get(name)
     graft.Bench.warmUp(spark, sfDir)
     def once(): Double = {
       val t0 = System.nanoTime()
@@ -62,7 +60,9 @@ object TimeQuery {
     val build = once()
     println(f"[timequery] $name artifact-build pass (untimed): $build%.2f s")
     val ts = (1 to n).map { i =>
-      evict.foreach(_())
+      // Evict between samples exactly when Bench would (covers build
+      // phases and the memoizing benchOnly exhibits like j01).
+      graft.Bench.evictArtifacts(spark, sfDir, name)
       val probe = graft.Bench.hostProbeMillis()
       val g0 = graft.Bench.gcMillis()
       val t = once()
