@@ -87,25 +87,26 @@ object Bench {
     * like [[session]]. */
   private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
-    catch { case _: Throwable => }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] warm-up failed: $e")
+    }
     try {
       import org.apache.spark.sql.functions.col
       val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id").as("id"), col("embedding").as("features"))
         .limit(256)
       graft.nnd.NND.buildGraph(e, graft.nnd.NND.Params(k = 5, maxIterations = 2)).count()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] warm-up failed: $e")
+    }
   }
 
-  /** Parse a prior bench artifact's per-phase medians. Accepts every
-    * shape in the repo: the raw bench line (top-level `queries` of
-    * plain numbers), the driver's per-round wrapper, whose reliable
+  /** Parse a prior bench artifact's per-phase medians. Accepts both
+    * shapes in the repo: the raw bench line (top-level `queries` of
+    * plain numbers) and the driver's per-round wrapper, whose reliable
     * machine part is the compact line under `parsed.queries` (the
-    * wrapper's `tail` holds a truncated stdout copy of the full line),
-    * and the round-17 durable-baseline shape where each phase's value
-    * is an object `{"med":…,"samples":[…],"probes":[…]}` (the guard
-    * keys on `med`; samples/probes are the adjudication record). Any
-    * read/parse failure degrades to an empty map, never a crashed
+    * wrapper's `tail` holds a truncated stdout copy of the full line).
+    * Any read/parse failure degrades to an empty map, never a crashed
     * bench. */
   private[graft] def loadPriorQueries(p: java.nio.file.Path): Map[String, Double] =
     try {
@@ -125,8 +126,6 @@ object Bench {
       q match {
         case JObject(fields) => fields.collect {
           case (k, v) if num.isDefinedAt(v) => k -> num(v)
-          case (k, o: JObject) if num.isDefinedAt(o \ "med") =>
-            k -> num(o \ "med")
         }.toMap
         case _ => Map.empty
       }
@@ -135,145 +134,8 @@ object Bench {
       Map.empty
     }
 
-  /** The per-phase sample/probe arrays of a prior bench.json — the
-    * durable telemetry [[writeBaseline]] carries into the frozen
-    * baseline so adjudication never needs the (overwritten) close-tree
-    * file. Phase probes = the pass-1 reading (`host_probe_ms`)
-    * followed by the per-rerun readings (`rerun_probe_ms`), run order
-    * preserved. Parse failure degrades to empty maps. */
-  private[graft] def loadPriorDetail(p: java.nio.file.Path):
-      (Map[String, Seq[Double]], Map[String, Seq[Long]]) =
-    try {
-      import org.json4s._
-      val j = jackson.JsonMethods.parse(new String(
-        java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      def num: PartialFunction[JValue, Double] = {
-        case JDouble(v) => v
-        case JInt(v) => v.toDouble
-        case JLong(v) => v.toDouble
-        case JDecimal(v) => v.toDouble
-      }
-      def arr(v: JValue): Seq[Double] = v match {
-        case JArray(xs) => xs.collect(num)
-        case _ => Seq.empty
-      }
-      def objMap(v: JValue): Map[String, JValue] = v match {
-        case JObject(fs) => fs.toMap
-        case _ => Map.empty
-      }
-      // bench.json shape: top-level samples / host_probe_ms (pass-1
-      // single reading) / rerun_probe_ms maps.
-      val flatSamples = objMap(j \ "samples").map { case (k, v) => k -> arr(v) }
-        .filter(_._2.nonEmpty)
-      val p1 = objMap(j \ "host_probe_ms")
-        .collect { case (k, v) if num.isDefinedAt(v) => k -> num(v).toLong }
-      val rr = objMap(j \ "rerun_probe_ms")
-        .map { case (k, v) => k -> arr(v).map(_.toLong) }
-      val flatProbes = (p1.keySet ++ rr.keySet).map { k =>
-        k -> (p1.get(k).toSeq ++ rr.getOrElse(k, Seq.empty))
-      }.toMap.filter(_._2.nonEmpty)
-      // Frozen-baseline shape: the arrays live INSIDE each phase's
-      // {med,samples,probes} object under `queries`.
-      val nested = objMap(j \ "queries").collect { case (k, o: JObject) =>
-        k -> (arr(o \ "samples"), arr(o \ "probes").map(_.toLong))
-      }
-      val nestedSamples = nested.map { case (k, v) => k -> v._1 }
-        .filter(_._2.nonEmpty)
-      val nestedProbes = nested.map { case (k, v) => k -> v._2 }
-        .filter(_._2.nonEmpty)
-      (flatSamples ++ nestedSamples, flatProbes ++ nestedProbes)
-    } catch { case _: Throwable => (Map.empty, Map.empty) }
-
-  /** Write a frozen baseline in the round-17 durable shape: per phase
-    * `{"med":…,"samples":[…],"probes":[…]}` — the median the guard
-    * keys on, the sorted wall samples behind it, and the host-probe
-    * readings that date-stamp the host's health when those walls were
-    * taken (a prior without its probes cannot be adjudicated against,
-    * which is how round 16 minted six false code-suspect flags).
-    * Missing telemetry degrades to a 1-element sample array (the
-    * median itself) and an empty probe array, never a lost phase. */
-  private[graft] def writeBaseline(path: java.nio.file.Path, round: Int,
-      meds: Map[String, Double],
-      samples: Map[String, Seq[Double]],
-      probes: Map[String, Seq[Long]]): Boolean = {
-    val qs = meds.toSeq.sortBy(_._1).map { case (k, v) =>
-      val s = samples.getOrElse(k, Seq(v))
-        .map(t => math.round(t * 1000) / 1000.0)
-      "\"" + k + "\":{\"med\":" + (math.round(v * 1000) / 1000.0) +
-        ",\"samples\":" + s.mkString("[", ",", "]") +
-        ",\"probes\":" +
-        probes.getOrElse(k, Seq.empty).mkString("[", ",", "]") + "}"
-    }.mkString("{", ",", "}")
-    try {
-      java.nio.file.Files.write(path,
-        (s"""{"round":$round,"queries":$qs}""" + "\n").getBytes("UTF-8"))
-      true
-    } catch { case _: Throwable => false }
-  }
-
-  /** Explicit quiet-host baseline RE-freeze (round-17 VERDICT
-    * directive; enabled per-run via `SPARK_GRAFT_FREEZE_BASELINE=1`):
-    * replace the frozen priors with THIS run's medians — but only
-    * when the measurements are actually adjudicable as quiet-host.
-    * Policy, mechanical:
-    *  - the whole freeze is REFUSED when the session-nominal probe
-    *    exceeds 40 ms (healthy nominal on this host is ~25-40 ms;
-    *    r16's degraded sessions read 88-284) — a loud session must
-    *    never become the priors;
-    *  - per phase, the fresh median is frozen only if the phase is
-    *    non-crashed AND at least one of its recorded probes is
-    *    <= 45 ms (every-probe-hot means a transient burst owned that
-    *    phase's walls even in a quiet session); every other phase
-    *    RETAINS its existing baseline entry — a prior is never
-    *    silently dropped by a freeze, and the retention is logged;
-    *  - a phase the SAME run flagged (`suspect`: code-suspect or
-    *    failed verdict) retains its existing prior too — a flagged
-    *    phase must never re-baseline itself, else one slow run buries
-    *    a real regression from every later guard comparison.
-    * Returns the set of phases frozen fresh, or None when refused. */
-  private[graft] def refreezeBaseline(path: java.nio.file.Path,
-      round: Int,
-      meds: Map[String, Double],
-      samples: Map[String, Seq[Double]],
-      probes: Map[String, Seq[Long]],
-      sessionProbeMs: Long,
-      suspect: Set[String] = Set.empty): Option[Set[String]] = {
-    if (sessionProbeMs < 0 || sessionProbeMs > 40) {
-      System.err.println(s"[bench] baseline re-freeze REFUSED: session " +
-        s"probe median $sessionProbeMs ms > 40 (not a quiet host)")
-      None
-    } else {
-      val fresh = meds.filter { case (n, m) =>
-        m >= 0 && !suspect(n) && probes.getOrElse(n, Seq.empty).exists(_ <= 45)
-      }
-      val excluded = meds.keySet -- fresh.keySet
-      val existing = loadPriorQueries(path).filter(_._2 >= 0)
-      val (exSamples, exProbes) = loadPriorDetail(path)
-      val retained = existing -- fresh.keySet
-      val dropped = excluded -- retained.keySet
-      if (excluded.nonEmpty)
-        System.err.println(s"[bench] re-freeze: retaining prior entries " +
-          s"for ${retained.keySet.intersect(excluded).toSeq.sorted.mkString(",")}" +
-          (if (dropped.nonEmpty)
-            s"; NO prior available for ${dropped.toSeq.sorted.mkString(",")}"
-          else ""))
-      val ok = writeBaseline(path, round, retained ++ fresh,
-        exSamples.view.filterKeys(retained.keySet).toMap ++
-          samples.view.filterKeys(fresh.keySet).toMap,
-        exProbes.view.filterKeys(retained.keySet).toMap ++
-          probes.view.filterKeys(fresh.keySet).toMap)
-      if (ok) {
-        System.err.println(s"[bench] baseline re-frozen (round $round): " +
-          s"${fresh.size} fresh, ${retained.size} retained, " +
-          s"session probe $sessionProbeMs ms")
-        Some(fresh.keySet)
-      } else None
-    }
-  }
-
   /** The newest driver-written `BENCH_r<N>.json` in `dir`, with its
-    * round number — the round stamp for baseline freezes and the
-    * compact-overlay source for the guard. */
+    * round number — the source of the compact line's carried keys. */
   private[graft] def newestDriverBench(dir: java.nio.file.Path):
       Option[(Int, java.nio.file.Path)] = {
     import scala.jdk.CollectionConverters._
@@ -285,91 +147,29 @@ object Bench {
     catch { case _: Throwable => None }
   }
 
-  /** Prior per-phase medians for the regression guard, with their
-    * provenance label. Default sources, merged: the repo's committed
-    * `bench.json` (the previous round's close-tree run — the FULL
-    * per-phase map, read before this run overwrites it) overlaid by
-    * the newest driver artifact `BENCH_r*.json` (top-10 compact map).
-    * An explicit path (SPARK_GRAFT_BENCH_PREV) overrides both. */
+  /** Prior per-phase medians for the regression guard, with the name
+    * of the file they came from: the path in SPARK_GRAFT_BENCH_PREV
+    * when set, else the committed full bench line
+    * `bench_baseline.json` in `dir`. Nothing writes that file at run
+    * time; re-baselining commits a new one. Crashed medians (-1) are
+    * not priors. A missing, unreadable or empty prior is None, said
+    * on stderr with the path. */
   private[graft] def priorMedians(
       explicit: Option[String],
       dir: java.nio.file.Path = java.nio.file.Paths.get(".")):
-      Option[(String, Map[String, Double])] =
-    explicit.map(java.nio.file.Paths.get(_)) match {
-      case Some(p) =>
-        val m = loadPriorQueries(p)
-        if (m.isEmpty) None else Some(p.getFileName.toString -> m)
-      case None =>
-        val newest = newestDriverBench(dir)
-        // Frozen per-round baseline: bench.json is OVERWRITTEN by every
-        // run, so a second same-round run would otherwise compare
-        // against its own round's earlier output and mask exactly the
-        // within-round regressions the guard exists to catch
-        // (round-15 self-review finding). The first run after a new
-        // driver artifact BENCH_rN.json appears freezes the inherited
-        // bench.json (the previous round's close) as
-        // bench_baseline.json stamped with N; later runs of the same
-        // round read the frozen copy untouched.
-        val basePath = dir.resolve("bench_baseline.json")
-        val newestRound = newest.map(_._1).getOrElse(0)
-        val storedRound: Int =
-          try {
-            import org.json4s._
-            jackson.JsonMethods.parse(new String(
-              java.nio.file.Files.readAllBytes(basePath), "UTF-8")) \ "round" match {
-              case JInt(r) => r.toInt
-              case _ => -1
-            }
-          } catch { case _: Throwable => -1 }
-        val closeTree = Some(dir.resolve("bench.json"))
-          .filter(java.nio.file.Files.isRegularFile(_))
-        var baselineRound = storedRound
-        if (storedRound < newestRound) {
-          // Crashed-phase medians (-1) are excluded from the frozen
-          // baseline: a negative prior can never flag anything AND
-          // would exempt the phase's recovery from ever re-baselining
-          // (round-15 ADVICE finding). The freeze carries the close
-          // tree's per-phase samples + probes forward (round-17
-          // durable shape) so the priors stay adjudicable after
-          // bench.json is overwritten.
-          closeTree.foreach { ct =>
-            val m = loadPriorQueries(ct).filter(_._2 >= 0)
-            if (m.nonEmpty) {
-              val (samples, probes) = loadPriorDetail(ct)
-              if (writeBaseline(basePath, newestRound, m, samples, probes))
-                baselineRound = newestRound
-            }
-          }
-        }
-        val baseline = Some(basePath)
-          .filter(java.nio.file.Files.isRegularFile(_))
-        // The frozen round-start baseline is the full prior map. The
-        // newest driver artifact's compact top-10 overlays it ONLY
-        // when no baseline for that round could be captured: once a
-        // round-N baseline exists, BENCH_rN carries the SAME round's
-        // numbers, and overlaying them would partially compare
-        // same-round medians — the within-round masking the frozen
-        // baseline exists to prevent (round-15 ADVICE finding). Raw
-        // bench.json is the fallback when no baseline exists at all.
-        val base = baseline.orElse(closeTree)
-        // The overlay is negative-filtered BEFORE the merge: a crashed
-        // phase's -1 in the driver artifact must not ERASE a valid
-        // baseline prior for that phase (post-merge filtering would
-        // first overwrite 5.0 with -1, then drop the key — and the
-        // phase's next regression or repeat crash would go unflagged).
-        val overlay =
-          if (baselineRound >= newestRound) Map.empty[String, Double]
-          else newest.map(n => loadPriorQueries(n._2).filter(_._2 >= 0))
-            .getOrElse(Map.empty)
-        val merged =
-          base.map(loadPriorQueries).getOrElse(Map.empty)
-            .filter(_._2 >= 0) ++ overlay
-        if (merged.isEmpty) None
-        else Some((base.map(_.getFileName.toString).toSeq ++
-          (if (overlay.isEmpty) Seq.empty
-           else newest.map(_._2.getFileName.toString).toSeq))
-          .mkString("+") -> merged)
+      Option[(String, Map[String, Double])] = {
+    val p = explicit.map(java.nio.file.Paths.get(_))
+      .getOrElse(dir.resolve("bench_baseline.json"))
+    val m =
+      if (!java.nio.file.Files.isRegularFile(p)) Map.empty[String, Double]
+      else loadPriorQueries(p).filter(_._2 >= 0)
+    if (m.nonEmpty) Some(p.getFileName.toString -> m)
+    else {
+      System.err.println(s"[bench] NO regression prior: $p is missing, " +
+        "unreadable or holds no phase medians")
+      None
     }
+  }
 
   /** The regression rule: a phase flags when its current median
     * exceeds 1.5x its prior one and the prior is >= 0.5 s (below
@@ -444,9 +244,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Parsed up front: a malformed value must fail before pass 1, not
-    // after minutes of measurement.
-    val nHeavy = sys.env.getOrElse("SPARK_GRAFT_BENCH_HEAVY", "10").toInt
     val spark = session()
     warmUp(spark, sfDir)
     val gcBase = gcMillis()
@@ -474,7 +271,7 @@ object Bench {
         // filter on a hot-shingle corpus (shuffle bytes are the metric).
         Queries.benchOnly.toSeq.sortBy(_._1)
           .map { case (name, fn) => name -> (() => materialize(fn(spark, sfDir))) }
-    runBench(spark, sfDir, phases, nHeavy, gcBase)
+    runBench(spark, sfDir, phases, gcBase)
   }
 
   /** The prebuilt-artifact `*_build` phases, factored out of [[main]]
@@ -579,7 +376,7 @@ object Bench {
         Queries.artifactTag(sfDir, prefix)))
 
   private def runBench(spark: SparkSession, sfDir: String,
-      phases: Seq[(String, () => Long)], nHeavy: Int, gcBase: Long): Unit = {
+      phases: Seq[(String, () => Long)], gcBase: Long): Unit = {
     // Per-phase host-health readings (pass 1) — the fixed-work CPU spin
     // recorded like gc_ms, destined for the durable bench.json.
     val probeLog = scala.collection.mutable.LinkedHashMap[String, Long]()
@@ -604,10 +401,10 @@ object Bench {
     // times swing 3–6× between identical-code runs (round 4: d04 27.3s →
     // 4.4s, d08 4.6s → 15.4s with zero code change), which makes
     // single-run per-query grading meaningless exactly where it matters.
-    // The cheap majority stays single-pass; the top-N by pass-1 time get
+    // The cheap majority stays single-pass; the top-10 by pass-1 time get
     // two more timed runs and report the median. Shuffle bytes are
     // plan-deterministic, so pass-1 values stand.
-    val heavy = pass1.sortBy(-_._2).take(nHeavy).map(_._1).toSet
+    val heavy = pass1.sortBy(-_._2).take(10).map(_._1).toSet
     val runFn = phases.toMap
     // Forced median-of-5 (with per-sample telemetry): the historical
     // diagnosis pair (st18: 32.9 s in r7, then 3.45 <-> 4.71 s across
@@ -707,11 +504,11 @@ object Bench {
     // --- Per-phase regression guard (round-15 directive) ---
     // The bench total has crept round-over-round while per-phase stayed
     // flat, and proving "nothing regressed" required hand-diffing two
-    // top-10 lists. Self-attribute instead: load the PREVIOUS round's
-    // per-phase medians (the newest driver-written BENCH_r*.json in the
-    // working directory, overridable via SPARK_GRAFT_BENCH_PREV), and
-    // flag any phase whose current median exceeds 1.5x its prior one in
-    // a durable `regressions` section carrying both values. Phases under
+    // top-10 lists. Self-attribute instead: load the committed
+    // per-phase medians (`bench_baseline.json`, a full 32-core sf0.1
+    // bench line; overridable via SPARK_GRAFT_BENCH_PREV), and flag
+    // any phase whose current median exceeds 1.5x its prior one in a
+    // durable `regressions` section carrying both values. Phases under
     // 0.5 s prior are exempt (scheduler noise dominates them); a flagged
     // phase still needs human adjudication (code change vs co-tenancy —
     // the per-sample arrays attribute that), but the DETECTION is now
@@ -820,28 +617,6 @@ object Bench {
     val outPath = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json"))
     java.nio.file.Files.write(outPath, (line + "\n").getBytes("UTF-8"))
-    // Opt-in quiet-host baseline re-freeze (see refreezeBaseline) —
-    // after the durable record, so a refused freeze still leaves the
-    // run fully recorded.
-    if (sys.env.get("SPARK_GRAFT_FREEZE_BASELINE").contains("1")) {
-      val phaseProbes: Map[String, Seq[Long]] =
-        pass1.map { case (name, _, _, _) =>
-          name -> (probeLog.get(name).toSeq ++
-            rerunProbeLog.getOrElse(name, Seq.empty))
-        }.toMap
-      val meds = results.map { case (n, m, _, _) => n -> m }.toMap
-      val freshSamples = meds.collect { case (n, m) =>
-        n -> sampleLog.getOrElse(n, if (m >= 0) Seq(m) else Seq.empty)
-      }
-      refreezeBaseline(java.nio.file.Paths.get("bench_baseline.json"),
-        newestDriverBench(java.nio.file.Paths.get(".")).map(_._1)
-          .getOrElse(0),
-        meds, freshSamples, phaseProbes, probeMedian,
-        suspect = regressions.collect {
-          case (name, _, _, _, v) if v == "code-suspect" || v == "failed" =>
-            name
-        }.toSet): Unit
-    }
     // The driver captures only a bounded stdout tail (~4 KB) and the full
     // line above grew past it two rounds running (69 queries x 3 maps ~8 KB,
     // so the tail started mid-line -> parsed:null). Emit the full line

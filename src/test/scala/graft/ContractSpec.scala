@@ -92,66 +92,45 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("bench regression guard: parses both prior-artifact shapes and merges sources") {
+    // The name is historical: there is one prior source now, the
+    // committed baseline or an explicit path, and nothing is merged.
     val dir = java.nio.file.Files.createTempDirectory("graft_benchprev")
     try {
-      // The raw bench line (close-tree bench.json): full per-phase map.
-      java.nio.file.Files.writeString(dir.resolve("bench.json"),
-        """{"metric":"total","value":9.9,"queries":{"a_q":2.0,"b_q":4.0,"c_q":0.2}}""")
-      // The driver wrapper: compact map under parsed.queries (overlays).
+      // The committed baseline: a raw bench line, full per-phase map;
+      // a crashed (-1) median is not a prior.
+      java.nio.file.Files.writeString(dir.resolve("bench_baseline.json"),
+        """{"metric":"total","value":9.9,"queries":{"a_q":2.0,"b_q":4.0,"c_q":0.2,"dead_q":-1.0}}""")
+      // The driver wrapper: compact map under parsed.queries.
       java.nio.file.Files.writeString(dir.resolve("BENCH_r14.json"),
         """{"n":1,"tail":"...","parsed":{"queries":{"b_q":3.0}}}""")
       // An older round artifact that must NOT win the newest-selection.
       java.nio.file.Files.writeString(dir.resolve("BENCH_r09.json"),
         """{"n":1,"parsed":{"queries":{"b_q":99.0}}}""")
-      val Some((label, m)) = Bench.priorMedians(None, dir): @unchecked
-      assert(label == "bench_baseline.json",
-        "once a round-N baseline exists, the same round's driver " +
-          "artifact must NOT overlay it (within-round masking)")
-      assert(m == Map("a_q" -> 2.0, "b_q" -> 4.0, "c_q" -> 0.2),
-        "frozen round-start baseline, full map, no same-round overlay")
-      // Same-round freeze: a later run overwrites bench.json with its
-      // own output; the guard must keep comparing against the frozen
-      // round-start baseline, never same-round numbers (which would
-      // mask exactly the within-round regressions it exists to catch).
+      val base = Some("bench_baseline.json" ->
+        Map("a_q" -> 2.0, "b_q" -> 4.0, "c_q" -> 0.2))
+      assert(Bench.priorMedians(None, dir) == base,
+        "the committed baseline is the prior, full map, crashed median " +
+          "dropped, no driver-artifact overlay")
+      // A run's own output beside the baseline never becomes the prior,
+      // so a second run cannot mask a regression the first one made.
       java.nio.file.Files.writeString(dir.resolve("bench.json"),
         """{"queries":{"a_q":9.0,"b_q":9.0,"dead_q":-1.0}}""")
-      val Some((labelFroz, mFroz)) = Bench.priorMedians(None, dir): @unchecked
-      assert(labelFroz == "bench_baseline.json" &&
-        mFroz("a_q") == 2.0, "same-round output must not replace the baseline")
-      // New round: a newer driver artifact refreshes the baseline from
-      // the inherited bench.json (the previous round's close) — minus
-      // crashed-phase medians, which are not priors (a -1 can never
-      // flag and would exempt the phase's recovery forever).
-      java.nio.file.Files.writeString(dir.resolve("BENCH_r15.json"),
-        """{"parsed":{"queries":{"b_q":1.0}}}""")
-      val Some((_, mRoll)) = Bench.priorMedians(None, dir): @unchecked
-      assert(mRoll == Map("a_q" -> 9.0, "b_q" -> 9.0),
-        "round rollover must re-freeze from the inherited close, " +
-          "exclude crashed medians, and not overlay same-round numbers")
-      // With NO baseline and no close-tree bench.json, the newest
-      // driver artifact is the only prior and DOES apply.
-      java.nio.file.Files.delete(dir.resolve("bench.json"))
-      java.nio.file.Files.delete(dir.resolve("bench_baseline.json"))
-      val Some((labelOnly, mOnly)) = Bench.priorMedians(None, dir): @unchecked
-      assert(labelOnly == "BENCH_r15.json" && mOnly == Map("b_q" -> 1.0),
-        "driver artifact is the fallback prior when nothing was frozen")
-      // An overlay-side crashed median (-1) must not ERASE a valid
-      // stale-baseline prior: the negative filter applies to the
-      // overlay BEFORE the merge, so b_q keeps its baseline value.
-      java.nio.file.Files.writeString(dir.resolve("bench_baseline.json"),
-        """{"round":15,"queries":{"b_q":5.0}}""")
-      java.nio.file.Files.writeString(dir.resolve("BENCH_r16.json"),
-        """{"parsed":{"queries":{"b_q":-1.0}}}""")
-      val Some((_, mCrash)) = Bench.priorMedians(None, dir): @unchecked
-      assert(mCrash("b_q") == 5.0,
-        "a crashed overlay median replaced (then dropped) a valid prior")
-      // Explicit override takes precedence over both defaults.
+      assert(Bench.priorMedians(None, dir) == base,
+        "a bench.json written beside the baseline must not change the prior")
+      // The wrapper shape still parses, for the compact line's carry of
+      // the newest driver artifact's keys.
+      assert(Bench.newestDriverBench(dir).map(_._1) == Some(14))
+      assert(Bench.loadPriorQueries(dir.resolve("BENCH_r14.json")) ==
+        Map("b_q" -> 3.0))
+      // Explicit override takes precedence over the baseline.
       val Some((l2, m2)) = Bench.priorMedians(
         Some(dir.resolve("BENCH_r09.json").toString), dir): @unchecked
       assert(l2 == "BENCH_r09.json" && m2 == Map("b_q" -> 99.0))
-      // Garbage degrades to no-prior, never an exception.
+      // Garbage or a missing file degrades to no-prior, never an exception.
       java.nio.file.Files.writeString(dir.resolve("bad.json"), "{not json")
       assert(Bench.priorMedians(Some(dir.resolve("bad.json").toString), dir).isEmpty)
+      java.nio.file.Files.delete(dir.resolve("bench_baseline.json"))
+      assert(Bench.priorMedians(None, dir).isEmpty)
     } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.list(dir).iterator().asScala
@@ -160,83 +139,19 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
-  test("bench baseline: durable {med,samples,probes} shape round-trips, " +
-      "auto-freeze carries close-tree telemetry, re-freeze is quiet-host-gated") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_baseline")
-    try {
-      // (1) The guard reads medians from the rich shape (and still
-      // from plain numbers in the same map).
-      java.nio.file.Files.writeString(dir.resolve("mixed.json"),
-        """{"queries":{"a_q":{"med":2.5,"samples":[2.4,2.5,2.9],"probes":[31,33]},"b_q":4.0}}""")
-      assert(Bench.loadPriorQueries(dir.resolve("mixed.json")) ==
-        Map("a_q" -> 2.5, "b_q" -> 4.0),
-        "rich per-phase objects must yield their med alongside plain numbers")
-      // (2) Round-rollover auto-freeze carries the close tree's
-      // samples + probes into the frozen baseline (pass-1 probe first,
-      // then the rerun probes, run order preserved).
-      java.nio.file.Files.writeString(dir.resolve("bench.json"),
-        """{"queries":{"a_q":2.0,"b_q":4.0},""" +
-          """"samples":{"a_q":[1.9,2.0,2.2]},""" +
-          """"host_probe_ms":{"a_q":30,"b_q":28},""" +
-          """"rerun_probe_ms":{"a_q":[33,29,31]}}""")
-      java.nio.file.Files.writeString(dir.resolve("BENCH_r17.json"),
-        """{"parsed":{"queries":{"a_q":2.1}}}""")
-      val Some((label, m)) = Bench.priorMedians(None, dir): @unchecked
-      assert(label == "bench_baseline.json" && m("a_q") == 2.0)
-      val (s, p) = Bench.loadPriorDetail(dir.resolve("bench_baseline.json"))
-      assert(s("a_q") == Seq(1.9, 2.0, 2.2),
-        s"frozen baseline must carry the close tree's samples: $s")
-      assert(p("a_q") == Seq(30L, 33L, 29L, 31L) && p("b_q") == Seq(28L),
-        s"frozen baseline must carry pass-1 + rerun probes in run order: $p")
-      // (3) A loud session can never become the priors.
-      assert(Bench.refreezeBaseline(dir.resolve("bench_baseline.json"),
-        round = 17, meds = Map("a_q" -> 1.0),
-        samples = Map("a_q" -> Seq(1.0)),
-        probes = Map("a_q" -> Seq(30L)), sessionProbeMs = 88L).isEmpty,
-        "re-freeze must refuse a session whose nominal probe is loud")
-      assert(Bench.loadPriorQueries(dir.resolve("bench_baseline.json"))("a_q") == 2.0,
-        "a refused re-freeze must leave the baseline untouched")
-      // (4) A quiet-session re-freeze freezes healthy-probe phases
-      // fresh, RETAINS the existing prior for an all-hot-probe phase
-      // and for phases not re-measured, and drops crashed medians.
-      val frozen = Bench.refreezeBaseline(dir.resolve("bench_baseline.json"),
-        round = 17,
-        meds = Map("a_q" -> 1.5, "c_q" -> 3.0, "dead_q" -> -1.0),
-        samples = Map("a_q" -> Seq(1.4, 1.5, 1.6), "c_q" -> Seq(2.9, 3.1)),
-        probes = Map("a_q" -> Seq(29L, 31L), "c_q" -> Seq(120L, 95L),
-          "dead_q" -> Seq(30L)),
-        sessionProbeMs = 31L)
-      assert(frozen == Some(Set("a_q")),
-        s"only the healthy-probe non-crashed phase freezes fresh: $frozen")
-      val after = Bench.loadPriorQueries(dir.resolve("bench_baseline.json"))
-      assert(after == Map("a_q" -> 1.5, "b_q" -> 4.0),
-        s"fresh a_q, retained b_q (not re-measured), no hot-probe c_q " +
-          s"prior existed to retain, crashed dead_q dropped: $after")
-      val (s2, p2) = Bench.loadPriorDetail(dir.resolve("bench_baseline.json"))
-      assert(s2("a_q") == Seq(1.4, 1.5, 1.6) && p2("a_q") == Seq(29L, 31L),
-        "the re-frozen prior must carry ITS OWN samples + probes")
-      assert(p2("b_q") == Seq(28L),
-        "a retained prior must keep its original probe record")
-      // (5) A phase the same run flagged code-suspect must NOT
-      // re-baseline itself — one slow run would otherwise bury a real
-      // regression from every later guard comparison.
-      val frozen2 = Bench.refreezeBaseline(dir.resolve("bench_baseline.json"),
-        round = 17,
-        meds = Map("a_q" -> 9.9, "b_q" -> 4.1),
-        samples = Map("a_q" -> Seq(9.9), "b_q" -> Seq(4.1)),
-        probes = Map("a_q" -> Seq(30L), "b_q" -> Seq(31L)),
-        sessionProbeMs = 31L, suspect = Set("a_q"))
-      assert(frozen2 == Some(Set("b_q")),
-        s"the flagged phase must be excluded from the fresh set: $frozen2")
-      val after2 = Bench.loadPriorQueries(dir.resolve("bench_baseline.json"))
-      assert(after2("a_q") == 1.5 && after2("b_q") == 4.1,
-        s"flagged a_q retains its prior; unflagged b_q freezes fresh: $after2")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(dir).iterator().asScala
-        .foreach(java.nio.file.Files.delete)
-      java.nio.file.Files.delete(dir)
-    }
+  test("bench regression guard: the committed baseline covers every phase") {
+    // A fresh clone is guarded against the whole phase set: a phase
+    // renamed or added without a re-baseline fails here. The phase
+    // thunks are only listed, never run, so no session is needed.
+    val Some((label, m)) = Bench.priorMedians(None): @unchecked
+    assert(label == "bench_baseline.json")
+    val phases = Bench.artifactPhases(null, "").map(_._1).toSet ++
+      SparkEntry.queries.keySet ++ Queries.benchOnly.keySet
+    val (unguarded, stale) = (phases -- m.keySet, m.keySet -- phases)
+    assert(unguarded.isEmpty && stale.isEmpty,
+      s"unguarded phases: $unguarded; baseline-only keys: $stale")
+    assert(Bench.loadPriorQueries(java.nio.file.Paths.get(label))
+      .values.forall(_ >= 0), "every baseline median is a real wall")
   }
 
   test("bench regression guard: flags >1.5x on >=0.5s priors only, " +
