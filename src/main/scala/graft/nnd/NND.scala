@@ -1,6 +1,6 @@
 package graft.nnd
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -26,8 +26,14 @@ import scala.util.Random
   *  - The reference's light/heavy message split (features shuffled only to
   *    consumers that need them, `NND.scala:40-60`) becomes an explicit
   *    two-table layout: a narrow edge table `(src, dst, sim)` plus one
-  *    features join per iteration. Features cross the wire exactly once
-  *    per iteration (the adjacency build), like the reference's G3/G4.
+  *    features join per refinement grouping ([[gather]]; the one-off
+  *    init buckets carry features, see [[initLists]]). The narrow id
+  *    rows are exchanged to their group first and features join in
+  *    after it, on the reduce side: while the node table broadcasts, no
+  *    feature vector enters a shuffle at all; once it is too large to
+  *    broadcast, the join is a sort-merge join and features cross the
+  *    wire once per grouping, into the group exchange (the reference's
+  *    G3/G4).
   *  - All randomness is seeded per (node, iteration) — the reference used
   *    global unseeded `Random` in two places (`NND.scala:98,148`), which
   *    is nondeterministic under task retries; ours is retry-safe.
@@ -47,6 +53,9 @@ private[nnd] final case class BucketedNode(bucket: Long, id: Long, features: Arr
 private[graft] final case class Cand(src: Long, dst: Long, sim: Double, isOld: Boolean)
 private[nnd] final case class AdjRow(
     src: Long, dst: Long, features: Array[Float], partition: Long, isNew: Boolean)
+/** A list entry of `src` with its features: the in-loop prune's row. */
+private[nnd] final case class PruneRow(
+    src: Long, dst: Long, sim: Double, isNew: Boolean, features: Array[Float])
 /** Neighbor list with per-entry new flags (true = entered the list this
   * iteration) — the state the incremental local join needs. */
 private[nnd] final case class FlaggedList(id: Long, neighbors: Seq[Neighbor], isNew: Seq[Boolean])
@@ -159,8 +168,10 @@ object NND {
     * — the second-order closure that k-NN correctness genuinely
     * requires — so active_r saturates toward N within a few rounds
     * even for tiny increments, and each saturated iteration's
-    * adjacency join then moves ~N·k' feature-carrying rows, the same
-    * G4 shape as a full build. Measured at sf0.1 (2 000 pts, k=10):
+    * adjacency gather then moves ~N·k' rows (feature-carrying once the
+    * node table is past the broadcast threshold), the same G4 shape as
+    * a full build. Measured at sf0.1 (2 000 pts, k=10), before the
+    * gather exchanged narrow rows only:
     * total update shuffle 53/70/84/91 MB for 0.2/1/5/20 % increments
     * vs 97 MB for a from-scratch build — the update's real wins are
     * fewer absorption iterations (δ hits its floor faster), skipped
@@ -309,8 +320,10 @@ object NND {
       p.pruneAlpha match {
         case None => (lists, ck)
         case Some(a) =>
-          val pr = truncate(pruneFlagged(lists, nodes, a, p.pruneMaxDegree), p.checkpointDir)
-          release(ck) // pr is materialized; ck has no other reader
+          val (prunedLists, exchanged) = pruneFlagged(lists, nodes, a, p.pruneMaxDegree)
+          val pr = truncate(prunedLists, p.checkpointDir)
+          // pr is materialized; ck and the gather's table have no other reader
+          Seq(ck, exchanged).foreach(release)
           (pr, pr)
       }
     var stable = stable0
@@ -327,30 +340,26 @@ object NND {
       val adjInput = edges.toDF().select($"src", $"dst", $"isNew")
         .union(sampleReverse(edges, p.sampleRate, iter, p.seed))
 
-      // Adjacency set Av = Bv ∪ sample(Rv) (reference G4): the ONLY place
-      // features are shuffled — one narrow-ids union, one join against the
-      // node table (reference sends features point-to-point in G3/G4; a
-      // shuffle join on dst is the relational equivalent). `nodes` is
-      // persisted pre-partitioned on id, so only the narrow id-pairs side
-      // shuffles here — features leave their partition exactly once, into
-      // the adjacency grouping. Duplicate (src,dst) pairs (a node both a
-      // forward and sampled-reverse neighbor) are deduped inside the
-      // per-group array instead of a dedicated dropDuplicates shuffle.
-      def localJoin(adj: DataFrame): Dataset[Cand] = adj
-        .join(nodes.toDF().select($"id".as("dst"), $"features", $"partition"), "dst")
-        .select($"src", $"dst", $"features", $"partition", $"isNew")
-        .as[AdjRow]
-        .groupByKey(_.src)
-        .flatMapGroups((_, it) => localJoinPairs(it))
+      // Adjacency set Av = Bv ∪ sample(Rv) (reference G4): the narrow
+      // (src, dst, isNew) rows are exchanged by src, then each member's
+      // features join in from the node table ([[gather]]; the reference
+      // sends features point-to-point in G3/G4). Duplicate (src,dst) pairs
+      // (a node both a forward and sampled-reverse neighbor) are deduped
+      // inside the per-group array instead of a dedicated dropDuplicates
+      // shuffle. Returns the candidates and the gather's exchanged table,
+      // released once the candidates are materialized.
+      def localJoin(adj: DataFrame): (Dataset[Cand], DataFrame) =
+        gather[AdjRow, Cand](adj, "src", "dst", nodes)((_, it) => localJoinPairs(it))
 
       // Merge with map-side partial aggregation; the per-node updated
       // count rides in the merged result, so convergence needs no
       // accumulator (deterministic under task retries).
-      val (merged, retiredCks): (Dataset[(Long, TopKResult)], Seq[Dataset[_]]) = stable match {
+      val (merged, spent): (Dataset[(Long, TopKResult)], Seq[Dataset[_]]) = stable match {
         case None =>
           val oldCands = edges.map(e => Cand(e.src, e.dst, e.sim, isOld = true))
-          (truncate(mergeTopK(localJoin(adjInput).unionByName(oldCands), k), p.checkpointDir),
-            Nil)
+          val (pairs, exchanged) = localJoin(adjInput)
+          (truncate(mergeTopK(pairs.unionByName(oldCands), k), p.checkpointDir),
+            Seq(exchanged))
         case Some(st) =>
           // Only adjacency groups with a NEW member generate pairs; carve
           // them out before the features join so untouched groups cost
@@ -383,9 +392,10 @@ object NND {
           // and — via targets — the stable/retired rebuild in a separate
           // job); materialize it once instead of re-running the similarity
           // loop per consumer (cross-action exchange reuse does not exist).
-          val pairCands = truncate(localJoin(adjInput
+          val (pairs, exchanged) = localJoin(adjInput
             .union(stableOldEdges)
-            .join(activeSrcs, Seq("src"), "left_semi")), p.checkpointDir)
+            .join(activeSrcs, Seq("src"), "left_semi"))
+          val pairCands = truncate(pairs, p.checkpointDir)
 
           // Re-merge ONLY nodes that received candidates; everyone else's
           // list is carried untouched via semi/anti joins on the
@@ -410,7 +420,7 @@ object NND {
             truncate(mergeTopK(pairCands.unionByName(oldCands), k), p.checkpointDir),
             truncate(byTargets(st, "left_anti").unionByName(retired), p.checkpointDir))
           stable = Some(newStable)
-          (m, Seq(st, pairCands))
+          (m, Seq(st, pairCands, exchanged))
       }
       val updates = merged.map(_._2.updated.toLong).toDF("u")
         .agg(coalesce(sum($"u"), lit(0L))).as[Long].head()
@@ -422,7 +432,7 @@ object NND {
       val (newActive, newActiveCk) = pruned(merged.map(flagged), merged)
       active = newActive
       activeCk = newActiveCk
-      (prevActive +: retiredCks).foreach(release)
+      (prevActive +: spent).foreach(release)
       iter += 1
 
       // δ-convergence (Dong et al.; reference C3, NND.scala:259-262).
@@ -509,9 +519,9 @@ object NND {
 
   /** Shared prologue: input checks, `base` (optional columns defaulted)
     * and the node table of unfinished rows, persisted pre-partitioned on
-    * id: every per-iteration features join (adjacency build) then reuses
-    * this partitioning, so the feature table itself is never re-shuffled
-    * across iterations — only the narrow id-pair side moves. */
+    * id: a sort-merge features join in [[gather]] (past the broadcast
+    * threshold) then reuses this partitioning, so the feature table
+    * itself is never re-shuffled across iterations. */
   private def nodeTable(input: DataFrame, p: Params,
       caller: String): (DataFrame, Dataset[NodeRow]) = {
     require(input.columns.contains("id") && input.columns.contains("features"),
@@ -562,7 +572,14 @@ object NND {
     * never cross partitions, then [[bucketDraws]]. With no prior graph
     * (`newIds = None`) every member draws; otherwise all nodes bucket
     * map-side, but only buckets holding >= 1 new point shuffle (the
-    * seed-bucket semi-join) and only new members draw. */
+    * seed-bucket semi-join) and only new members draw.
+    * Members shuffle WITH their features. Routing them through [[gather]]
+    * instead was measured and rejected (perfbench seed 1, 4 vCPUs): build
+    * shuffle fell 29.6 → 27.4 MB, but update's peak task memory rose
+    * 8.65 → 9.50 MB (the semi-join's exchange already partitions by
+    * bucket, so the gather's own exchange is dropped and the semi-join's
+    * broadcast relation lands in the task of the gather's sort), and with
+    * broadcast joins off build shuffle rose 57.8 → 58.4 MB. */
   private def initLists(nodes: Dataset[NodeRow], counts: Map[Long, Long],
       newIds: Option[DataFrame], p: Params): Dataset[FlaggedList] = {
     import nodes.sparkSession.implicits._
@@ -651,8 +668,8 @@ object NND {
   }
 
   /** In-loop occlusion prune of flagged lists (the `pruneAlpha` path):
-    * one edge-sized features join against the persisted pre-partitioned
-    * node table + the shared bounded RobustPrune kernel per group —
+    * one edge-sized [[gather]] of the list entries' features + the
+    * shared bounded RobustPrune kernel per group —
     * exactly [[graft.ops.GraphSearch.pruneGraph]]'s shape, but carrying
     * the new/old flags through so the incremental local join still
     * distinguishes fresh entries. The kernel is idempotent on its own
@@ -672,25 +689,61 @@ object NND {
     * left-join would re-pay an id-sized shuffle per loop turn to
     * defend a state the loop cannot produce. */
   private def pruneFlagged(g: Dataset[FlaggedList], nodes: Dataset[NodeRow],
-      alpha: Double, maxDegree: Int): Dataset[FlaggedList] = {
-    val spark = g.sparkSession
-    import spark.implicits._
+      alpha: Double, maxDegree: Int): (Dataset[FlaggedList], DataFrame) = {
+    import g.sparkSession.implicits._
     val edges = g.flatMap(nl => nl.neighbors.iterator.zip(nl.isNew.iterator)
       .map { case (nb, fresh) => (nl.id, nb.id, nb.similarity, fresh) })
       .toDF("src", "dst", "sim", "isNew")
-    edges
-      .join(nodes.toDF().select($"id".as("dst"), $"features"), "dst")
-      .select($"src", $"dst", $"sim", $"isNew", $"features")
-      .as[(Long, Long, Double, Boolean, Array[Float])]
-      .groupByKey(_._1)
-      .mapGroups { (src, it) =>
-        val a = it.toArray.sortBy(c => (-c._3, c._2))
-        val keep = graft.core.Occlusion.keepIndices(
-          a.map(_._3), a.map(_._5), alpha, maxDegree)
-        FlaggedList(src,
-          keep.toSeq.map(i => Neighbor(a(i)._2, a(i)._3)),
-          keep.toSeq.map(i => a(i)._4))
-      }
+    gather[PruneRow, FlaggedList](edges, "src", "dst", nodes) { (src, it) =>
+      val a = it.toArray.sortBy(c => (-c.sim, c.dst))
+      val keep = graft.core.Occlusion.keepIndices(
+        a.map(_.sim), a.map(_.features), alpha, maxDegree)
+      Iterator.single(FlaggedList(src,
+        keep.toSeq.map(i => Neighbor(a(i).dst, a(i).sim)),
+        keep.toSeq.map(i => a(i).isNew)))
+    }
+  }
+
+  /** THE features gather of the loop — the adjacency groups and the
+    * in-loop prune both run through it. The narrow rows of `narrow` (the
+    * group column `key`, the member id column `member`, flags) are
+    * exchanged by `key` first; then each member's `features` and
+    * `partition` join in from the node table on the reduce side, and
+    * every `key` group reaches `f` as `T` rows, in no particular order.
+    * While the node table broadcasts, no feature vector ever enters a
+    * shuffle; above the broadcast threshold the join is a sort-merge
+    * join that re-exchanges the narrow rows by member, and features
+    * cross the wire once, into the group exchange.
+    *  - The exchange is numbered with the session's shuffle-partition
+    *    count: AQE never coalesces a numbered repartition, so the group
+    *    stage keeps one task per shuffle partition instead of a
+    *    byte-sized handful.
+    *  - The exchanged rows are sorted by `key` and persisted, so the
+    *    group stage streams them in order with no Sort over wide rows
+    *    (a bare sortWithinPartitions below the join is removed by the
+    *    optimizer). The caller releases the returned table once the
+    *    output is materialized.
+    *  - Grouping on the real `key` column (not `groupByKey`'s appended
+    *    key) lets the planner see that the broadcast join's output is
+    *    already partitioned by `key`, so it adds no second exchange.
+    *  - The joined rows are projected to `T`'s fields in `T`'s order: the
+    *    row layout decides how well a sort-merge regime's group exchange
+    *    compresses (perfbench build, broadcast joins off: 58.20 MB in
+    *    join-output order, 57.82 MB in this one). */
+  private def gather[T: Encoder, U: Encoder](narrow: DataFrame, key: String, member: String,
+      nodes: Dataset[NodeRow])(f: (Long, Iterator[T]) => Iterator[U]): (Dataset[U], DataFrame) = {
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    val exchanged = narrow
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col(key))
+      .sortWithinPartitions(col(key))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val out = exchanged
+      .join(nodes.toDF().withColumnRenamed("id", member), member)
+      .select(implicitly[Encoder[T]].schema.fieldNames.toIndexedSeq.map(col): _*)
+      .groupBy(col(key)).as[Long, T]
+      .flatMapGroups(f)
+    (out, exchanged)
   }
 
   /** Reverse-edge ρ-sample (reference G2+G3, `NND.scala:116-169`), keyed by

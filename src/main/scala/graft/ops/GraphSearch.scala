@@ -223,9 +223,14 @@ object GraphSearch {
         // (measured: st29's per-micro-batch descent regressed 1.9x
         // under the unconditional form; the common all-covered case
         // must keep the caller's frontier plan byte-identical).
+        // The anti-join's left side is an un-hinted frame of the query
+        // ids and the partition `seedFrontier` reads: a broadcast hint on
+        // the left of a left-anti join cannot be honored (Spark drops it
+        // with a hint warning per plan).
         val ef = e.select(col("query_id"), col("node"))
-        val missing = q.join(ef.select("query_id").distinct(),
-          Seq("query_id"), "left_anti")
+        val missing = queries.select(col("id").as("query_id"),
+            (if (hasPart) col("partition") else lit(0L)).as("p_q"))
+          .join(ef.select("query_id").distinct(), Seq("query_id"), "left_anti")
         // Fallback seeds must be GRAPH MEMBERS: mid-descent callers
         // (searchHierarchical's upper layers) pass the unrestricted
         // corpus, and a non-member seed scores but never expands — the

@@ -313,6 +313,46 @@ class NNDSpec extends SparkSpec {
     }
   }
 
+  test("join-strategy invariance: broadcast and sort-merge feature joins give " +
+      "the same graphs, and no call leaves a cached table behind") {
+    import org.apache.spark.sql.functions.col
+    def lists(df: org.apache.spark.sql.DataFrame) = df
+      .select("id", "neighbors").collect()
+      .map(r => r.getLong(0) ->
+        Option(r.getSeq[Row](1)).map(_.map(n => (n.getLong(0), n.getDouble(1)))))
+      .toMap
+    // Each call, materialized, must release every table it persisted.
+    def released(name: String)(call: => org.apache.spark.sql.DataFrame) = {
+      val before = org.apache.spark.sql.CacheEntries.count(spark)
+      val out = lists(call)
+      assert(org.apache.spark.sql.CacheEntries.count(spark) == before,
+        s"$name left cached tables behind")
+      out
+    }
+    val built = NND.buildGraph(embeddings.filter(col("id") % 5 =!= 0),
+      NND.Params(k = K, maxIterations = 2)).select("id", "neighbors")
+    built.collect()
+    def calls(): Seq[Map[Long, Option[Seq[(Long, Double)]]]] = Seq(
+      released("buildGraph")(NND.buildGraph(embeddings, NND.Params(k = K, maxIterations = 2))),
+      released("updateGraph")(
+        NND.updateGraph(embeddings, built, NND.Params(k = K, maxIterations = 2))),
+      released("pruned buildGraph")(NND.buildGraph(embeddings,
+        NND.Params(k = K, maxIterations = 2, pruneAlpha = Some(1.2), pruneMaxDegree = 12))))
+    val broadcastJoins = calls()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    // With broadcast off, the features join re-exchanges the gathered
+    // rows by member id, and the group-by-src must re-group them.
+    val sortMergeJoins =
+      try {
+        spark.conf.set(key, "-1")
+        calls()
+      } finally spark.conf.set(key, prev)
+    Seq("buildGraph", "updateGraph", "pruned buildGraph").zipWithIndex.foreach { case (name, i) =>
+      assert(sortMergeJoins(i) == broadcastJoins(i), s"$name depends on the join strategy")
+    }
+  }
+
   test("incremental updateGraph is deterministic") {
     import org.apache.spark.sql.functions.col
     val oldPts = embeddings.filter(col("id") % 5 =!= 0)

@@ -93,6 +93,30 @@ class PlanSpec extends SparkSpec {
       s"rho-sampling still plans a window sort:\n${windowed.headOption.getOrElse("")}")
   }
 
+  test("NND gather: narrow rows exchange once by src, features join in after it " +
+      "with no exchange or sort before the local join") {
+    import org.apache.spark.sql.functions.col
+    val plans = capturedPlans {
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+        .select(col("vec_id").as("id"), col("embedding").as("features"))
+      graft.nnd.NND.buildGraph(emb, graft.nnd.NND.Params(k = 5, maxIterations = 1)).count()
+    }
+    // AQE prints the final and the initial plan; audit the final one.
+    val fin = plans.map(_.split("== Initial Plan ==").head)
+    val localJoin = fin.filter(p => p.contains("MapGroups") && p.contains("isNew") &&
+      p.contains("hashpartitioning(src"))
+    assert(localJoin.nonEmpty, s"no local-join plan captured:\n${fin.mkString("\n---\n")}")
+    localJoin.foreach { p =>
+      assert("Exchange hashpartitioning\\(src".r.findAllIn(p).size == 1,
+        s"the adjacency rows must be exchanged by src exactly once:\n$p")
+      val (groups, join) = (p.indexOf("MapGroups"), p.indexOf("BroadcastHashJoin"))
+      assert(join > groups, s"the features join is not a broadcast join below the groups:\n$p")
+      val between = p.substring(groups, join)
+      assert(!between.contains("Exchange") && !between.contains("Sort"),
+        s"an exchange or sort sits between the features join and the local join:\n$p")
+    }
+  }
+
   test("bucketed tables co-locate the join: no exchange before the sort-merge") {
     import org.apache.spark.sql.functions._
     val o = Queries.t(spark, sf0001, "orders")
