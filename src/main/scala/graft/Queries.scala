@@ -3996,7 +3996,7 @@ object Queries {
       // survivor join-back, and the input count) and the scored frame
       // two (the selector's rank and the threshold re-join); without
       // materialization Catalyst re-executes the regex-heaviest
-      // subtree per consumer (round-12 review) — the pairCands
+      // subtree per consumer (round-12 review) — NND's pairBufs
       // truncate-once precedent.
       val cl = htmlExtractFrame(stage0)
         .select(col("doc_id"), col("extracted").as("text"))

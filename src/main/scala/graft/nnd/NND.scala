@@ -34,6 +34,11 @@ import scala.util.Random
   *    broadcast, the join is a sort-merge join and features cross the
   *    wire once per grouping, into the group exchange (the reference's
   *    G3/G4).
+  *  - The local join's candidates never become rows: each local-join
+  *    task folds them into per-source top-k' buffers before anything
+  *    leaves it ([[partials]]), and the merge combines buffers — the
+  *    reference's `reduceByKey` map-side combine, done where the pairs
+  *    are made (REPOSE's partition-local top-k pruning).
   *  - All randomness is seeded per (node, iteration) — the reference used
   *    global unseeded `Random` in two places (`NND.scala:98,148`), which
   *    is nondeterministic under task retries; ours is retry-safe.
@@ -302,7 +307,7 @@ object NND {
     // Likewise measured and rejected: one body for every caller, the
     // carve-out body with an EMPTY stable set. Same graph, but on a
     // build every list is active, so the carve-outs (activeSrcs
-    // semi-join, pairCands checkpoint, target semi/anti joins, stable
+    // semi-join, pair-buffer checkpoint, target semi/anti joins, stable
     // rebuild) only add work: perfbench build seed 1 (4 vCPUs, N = 4000)
     // went 7.67 → 16.59 s wall and 127.8 → 129.7 MB shuffle, same graph
     // digest. Hence `stable0` selects the body from the input.
@@ -346,19 +351,24 @@ object NND {
       // sends features point-to-point in G3/G4). Duplicate (src,dst) pairs
       // (a node both a forward and sampled-reverse neighbor) are deduped
       // inside the per-group array instead of a dedicated dropDuplicates
-      // shuffle. Returns the candidates and the gather's exchanged table,
-      // released once the candidates are materialized.
-      def localJoin(adj: DataFrame): (Dataset[Cand], DataFrame) =
-        gather[AdjRow, Cand](adj, "src", "dst", nodes)((_, it) => localJoinPairs(it))
+      // shuffle. The task folds its candidates into per-source top-k'
+      // buffers ([[partials]]) before anything leaves it. Returns the
+      // buffers and the gather's exchanged table, released once the
+      // buffers are materialized.
+      def localJoin(adj: DataFrame): (Dataset[(Long, TopKBuf)], DataFrame) = {
+        val (pairs, exchanged) =
+          gather[AdjRow, Cand](adj, "src", "dst", nodes)((_, it) => localJoinPairs(it))
+        (partials(pairs, k), exchanged)
+      }
 
-      // Merge with map-side partial aggregation; the per-node updated
-      // count rides in the merged result, so convergence needs no
-      // accumulator (deterministic under task retries).
+      // The per-node updated count rides in the merged result, so
+      // convergence needs no accumulator (deterministic under task
+      // retries).
       val (merged, spent): (Dataset[(Long, TopKResult)], Seq[Dataset[_]]) = stable match {
         case None =>
-          val oldCands = edges.map(e => Cand(e.src, e.dst, e.sim, isOld = true))
+          val oldBufs = partials(edges.map(e => Cand(e.src, e.dst, e.sim, isOld = true)), k)
           val (pairs, exchanged) = localJoin(adjInput)
-          (truncate(mergeTopK(pairs.unionByName(oldCands), k), p.checkpointDir),
+          (truncate(mergeBuffers(pairs.union(oldBufs), k), p.checkpointDir),
             Seq(exchanged))
         case Some(st) =>
           // Only adjacency groups with a NEW member generate pairs; carve
@@ -390,37 +400,38 @@ object NND {
           // The O(|Av|²) local join is the iteration's dominant compute and
           // feeds THREE consumers (merge input, targets for the carve-outs,
           // and — via targets — the stable/retired rebuild in a separate
-          // job); materialize it once instead of re-running the similarity
-          // loop per consumer (cross-action exchange reuse does not exist).
+          // job); materialize its per-task buffers once instead of
+          // re-running the similarity loop per consumer (cross-action
+          // exchange reuse does not exist).
           val (pairs, exchanged) = localJoin(adjInput
             .union(stableOldEdges)
             .join(activeSrcs, Seq("src"), "left_semi"))
-          val pairCands = truncate(pairs, p.checkpointDir)
+          val pairBufs = truncate(pairs, p.checkpointDir)
 
           // Re-merge ONLY nodes that received candidates; everyone else's
           // list is carried untouched via semi/anti joins on the
           // (typically increment-sized) target set.
-          val targets = pairCands.toDF().select($"src".as("id")).distinct()
+          val targets = pairBufs.toDF().select($"_1".as("id")).distinct()
           def byTargets(lists: Dataset[FlaggedList], how: String): Dataset[FlaggedList] =
             lists.toDF().join(targets, Seq("id"), how).as[FlaggedList]
-          val oldCands: Dataset[Cand] =
+          val oldBufs = partials(
             byTargets(st, "left_semi").unionByName(byTargets(active, "left_semi"))
               .flatMap(nl => nl.neighbors.iterator
-                .map(nb => Cand(nl.id, nb.id, nb.similarity, isOld = true)))
+                .map(nb => Cand(nl.id, nb.id, nb.similarity, isOld = true))), k)
 
           // Untouched actives have been fully exploited — retire to stable
           // with flags dropped; stable loses any node the merge re-emitted.
           val retired = byTargets(active, "left_anti")
             .map(nl => FlaggedList(nl.id, nl.neighbors, nl.neighbors.map(_ => false)))
           // The merge and the stable-set rebuild read only the ALREADY
-          // materialized pairCands/stable/active checkpoints and are
+          // materialized pairBufs/stable/active checkpoints and are
           // independent of each other — overlap their truncation jobs
           // (guide §2.6; per-frame contents unchanged).
           val (m, newStable) = graft.core.Par.pair(
-            truncate(mergeTopK(pairCands.unionByName(oldCands), k), p.checkpointDir),
+            truncate(mergeBuffers(pairBufs.union(oldBufs), k), p.checkpointDir),
             truncate(byTargets(st, "left_anti").unionByName(retired), p.checkpointDir))
           stable = Some(newStable)
-          (m, Seq(st, pairCands, exchanged))
+          (m, Seq(st, pairBufs, exchanged))
       }
       val updates = merged.map(_._2.updated.toLong).toDF("u")
         .agg(coalesce(sum($"u"), lit(0L))).as[Long].head()
@@ -616,7 +627,7 @@ object NND {
             case (b, id, f, part, fresh) => (BucketedNode(b, id, f, part), fresh)
           }, k))
     }
-    truncate(mergeTopK(initCands, k).map(flagged), p.checkpointDir)
+    truncate(mergeBuffers(partials(initCands, k), k).map(flagged), p.checkpointDir)
   }
 
   /** Final reassembly (reference J1 left outer join, NND.scala:274-278),
@@ -636,15 +647,24 @@ object NND {
     result
   }
 
+  /** Per-task top-k' buffers of a candidate stream, one `(src, buffer)`
+    * row per source and task ([[TopKAggregator.partialTopK]]) — the
+    * map-side half of the reference's `reduceByKey` combine. Placed
+    * directly on the `Cand` producer (a group function, a flatMap), so
+    * the candidates pass to the fold as objects and are never encoded. */
+  private def partials(cands: Dataset[Cand], k: Int): Dataset[(Long, TopKBuf)] = {
+    import cands.sparkSession.implicits._
+    cands.mapPartitions(it => TopKAggregator.partialTopK(k)(it))
+  }
+
   /** Bounded top-K neighbor-list merge with dedup-by-id where old (B)
     * entries win — the reference's A4/A7/W1 composite (`NND.scala:104-109,
-    * 228-242`) — via [[TopKAggregator]], which (unlike a mapGroups pass)
-    * gets map-side partial aggregation like the reference's
-    * `reduceByKey`. Tie-break on (sim desc, dst asc) for determinism
-    * (the reference's stable sort order is shuffle-order-dependent). */
-  private def mergeTopK(cands: Dataset[Cand], k: Int): Dataset[(Long, TopKResult)] = {
-    import cands.sparkSession.implicits._
-    cands.groupByKey(_.src).agg(new TopKAggregator(k).toColumn)
+    * 228-242`) — over [[partials]]' buffers, via [[TopKMerge]]. Tie-break
+    * on (sim desc, dst asc) for determinism (the reference's stable sort
+    * order is shuffle-order-dependent). */
+  private def mergeBuffers(bufs: Dataset[(Long, TopKBuf)], k: Int): Dataset[(Long, TopKResult)] = {
+    import bufs.sparkSession.implicits._
+    bufs.groupByKey(_._1).agg(new TopKMerge(k).toColumn)
   }
 
   /** A merged list as loop state: entries that were not old are new. */
@@ -683,7 +703,7 @@ object NND {
     * from the pruned graph (unlike
     * [[graft.ops.GraphSearch.pruneGraph]], which left-joins rows
     * back). Both hold at every call site by construction: the input
-    * is a [[mergeTopK]] output (groups exist only where >= 1
+    * is a [[mergeBuffers]] output (groups exist only where >= 1
     * candidate arrived) and candidate ids are drawn from the
     * persisted `nodes` table itself. A per-iteration row-preserving
     * left-join would re-pay an id-sized shuffle per loop turn to
@@ -797,17 +817,20 @@ object NND {
         case _ =>
       }
     }
+    // Members are distinct by dst, and the similarity is bit-symmetric
+    // (l2's x - y is exactly -(y - x), summed in the same order), so each
+    // unordered pair is computed once and emitted in both directions.
     val a = seen.values.toArray.sortBy(_.dst)
     val out = new mutable.ArrayBuffer[Cand]()
     var i = 0
     while (i < a.length) {
-      var j = 0
+      var j = i + 1
       while (j < a.length) {
-        if (i != j && a(i).dst != a(j).dst && (a(i).isNew || a(j).isNew)) {
-          out += Cand(a(i).dst, a(j).dst,
-            Similarity.partitionGated(
-              a(i).features, a(i).partition, a(j).features, a(j).partition),
-            isOld = false)
+        if (a(i).isNew || a(j).isNew) {
+          val s = Similarity.partitionGated(
+            a(i).features, a(i).partition, a(j).features, a(j).partition)
+          out += Cand(a(i).dst, a(j).dst, s, isOld = false)
+          out += Cand(a(j).dst, a(i).dst, s, isOld = false)
         }
         j += 1
       }

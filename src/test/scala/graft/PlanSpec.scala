@@ -114,6 +114,12 @@ class PlanSpec extends SparkSpec {
       val between = p.substring(groups, join)
       assert(!between.contains("Exchange") && !between.contains("Sort"),
         s"an exchange or sort sits between the features join and the local join:\n$p")
+      // The per-task top-k fold sits directly on the group function, with
+      // no (de)serialization between them: candidates are never encoded.
+      val lines = p.split("\n")
+      val g = lines.indexWhere(_.contains("MapGroups"))
+      assert(g > 0 && lines(g - 1).contains("MapPartitions"),
+        s"the local join's candidates do not pass straight into MapPartitions:\n$p")
     }
   }
 

@@ -11,6 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * truncation-stable. These properties ARE the correctness argument for
   * map-side combining (TopKAggregator scaladoc); here they are checked
   * mechanically against 500 randomized inputs each instead of argued.
+  * NND's map-side combine is the local-join task's slot map
+  * (`TopKAggregator.partialTopK`), so the slot map is checked against
+  * the same reference and bit for bit against `reduce`.
   */
 class TopKAggregatorSpec extends AnyFunSuite {
 
@@ -23,25 +26,46 @@ class TopKAggregatorSpec extends AnyFunSuite {
   // sim (the algorithm's invariant: similarity is a pure function of
   // the endpoints); a tiny sim grid makes equal-sim ties common.
   private def simOf(dst: Long): Double = 0.1 + (dst % 7).toDouble / 10.0
-  private val candGen: Gen[List[Cand]] = Gen.listOf(for {
+  private val candOf: Gen[Cand] = for {
     dst <- Gen.choose(0L, 15L)
     old <- Gen.oneOf(true, false)
-  } yield Cand(0L, dst, simOf(dst), old))
+  } yield Cand(0L, dst, simOf(dst), old)
+  private val candGen: Gen[List[Cand]] = Gen.listOf(candOf)
+  /** Candidates of 8 sources, for the per-task slot map. */
+  private val multiSrcGen: Gen[List[Cand]] = Gen.listOf(for {
+    src <- Gen.choose(0L, 7L)
+    c <- candOf
+  } yield c.copy(src = src))
 
   /** Deterministic sample stream (fixed seed, advanced per draw). */
-  private def samples(n: Int): Seq[List[Cand]] = {
+  private def samples(n: Int, gen: Gen[List[Cand]] = candGen): Seq[List[Cand]] = {
     var seed = Seed(42L)
     (1 to n).map { _ =>
       seed = seed.next
-      candGen.pureApply(Gen.Parameters.default, seed)
+      gen.pureApply(Gen.Parameters.default, seed)
     }
   }
 
   private def fold(cs: Seq[Cand]): TopKBuf =
     cs.foldLeft(agg.zero)((b, c) => agg.reduce(b, c))
 
+  /** One task's partial rows of `cs`, as NND makes them. */
+  private def partials(cs: Seq[Cand]): Seq[(Long, TopKBuf)] =
+    TopKAggregator.partialTopK(K)(cs.iterator).toSeq
+
+  /** One source's stream folded through its slot: the task's only row
+    * (`zero` when the stream is empty). */
+  private def slot(cs: Seq[Cand]): TopKBuf = partials(cs) match {
+    case Seq() => agg.zero
+    case Seq((_, b)) => b
+  }
+
   private def canon(b: TopKBuf): (Seq[Long], Seq[Double], Seq[Boolean]) =
     (b.dst.toSeq, b.sim.toSeq, b.old.toSeq)
+
+  // Bit-level canon: Seq[Double].== uses primitive NaN != NaN.
+  private def bits(b: TopKBuf) =
+    (b.dst.toSeq, b.sim.toSeq.map(java.lang.Double.doubleToLongBits), b.old.toSeq)
 
   /** Reference semantics: dedup by dst (old-flag ORs), sort by
     * (sim desc, dst asc), truncate to K. */
@@ -98,12 +122,14 @@ class TopKAggregatorSpec extends AnyFunSuite {
     // must be unique-by-dst, ordered by (compare desc, dst asc), and
     // the NaN duplicates must merge to ONE entry with OR'd flags.
     val whole = fold(cs)
-    // Bit-level canon: Seq[Double].== uses primitive NaN != NaN.
-    def bits(b: TopKBuf) =
-      (b.dst.toSeq, b.sim.toSeq.map(java.lang.Double.doubleToLongBits), b.old.toSeq)
     (0 to cs.length).foreach { cut =>
       val (a, b) = cs.splitAt(cut)
       assert(bits(agg.merge(fold(a), fold(b))) == bits(whole), s"split $cut")
+    }
+    // The slot orders and dedups NaN the same way, in any input order.
+    (0 until cs.length).foreach { r =>
+      val rotated = cs.drop(r) ++ cs.take(r)
+      assert(bits(slot(rotated)) == bits(whole), s"slot, rotation $r")
     }
     assert(whole.dst.length == whole.dst.distinct.length, "dup escaped dedup")
     assert(whole.dst.count(_ == 2L) == 1)
@@ -115,5 +141,40 @@ class TopKAggregatorSpec extends AnyFunSuite {
     }
     assert(ord == sorted, s"list not in total order: $ord")
     assert(java.lang.Double.isNaN(whole.sim(0)), "NaN must sort first (largest)")
+  }
+
+  test("the slot folds a candidate stream to the reference, bit-equal to reduce") {
+    samples(Rounds).foreach { cs =>
+      val got = slot(cs)
+      val want = reference(cs)
+      assert(got.dst.toSeq == want.map(_._1), s"input: $cs")
+      assert(got.sim.toSeq == want.map(_._2), s"input: $cs")
+      assert(got.old.toSeq == want.map(_._3), s"input: $cs")
+      assert(bits(got) == bits(fold(cs)), s"input: $cs")
+    }
+  }
+
+  test("an unsorted, duplicated old list through the slot merges like its candidates") {
+    // Lists from a caller's existing graph carry no order or dedup
+    // guarantee; the merge needs sorted, deduplicated runs.
+    samples(Rounds).grouped(2).collect { case Seq(xs, ys) =>
+      val oldList = xs.map(_.copy(isOld = true))
+      val merged = new TopKMerge(K)
+      val got = merged.reduce(merged.reduce(merged.zero, (0L, slot(oldList))), (0L, slot(ys)))
+      val want = reference(oldList ++ ys)
+      assert(canon(got) == ((want.map(_._1), want.map(_._2), want.map(_._3))),
+        s"inputs: $oldList / $ys")
+      assert(bits(got) == bits(fold(oldList ++ ys)), s"inputs: $oldList / $ys")
+    }.toList
+  }
+
+  test("the slot map keeps one buffer per source, bit-equal to that source's fold") {
+    samples(Rounds, multiSrcGen).foreach { cs =>
+      val rows = partials(cs)
+      assert(rows.map(_._1).sorted == cs.map(_.src).distinct.sorted, s"input: $cs")
+      rows.foreach { case (src, b) =>
+        assert(bits(b) == bits(fold(cs.filter(_.src == src))), s"source $src of: $cs")
+      }
+    }
   }
 }
