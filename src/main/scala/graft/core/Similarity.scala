@@ -29,8 +29,8 @@ object Similarity {
     * That cross-kernel equality is load-bearing: similarities STORED
     * by one kernel and RE-derived by another (appendToGraph lists
     * folded into a later updateGraph, graph sims compared against
-    * column-form re-scores) must collapse to one entry in
-    * `TopKAggregator`'s (dst, sim) duplicate-merge. The NND pin
+    * column-form re-scores) must collapse to one entry in the top-k
+    * rule's (dst, sim) duplicate-merge (`nnd.TopKSlot`). The NND pin
     * family was re-measured against this kernel (round 9). */
   def l2(a: Array[Float], b: Array[Float]): Double = {
     require(a.length == b.length, s"vector size mismatch: ${a.length} vs ${b.length}")

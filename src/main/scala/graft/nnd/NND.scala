@@ -36,9 +36,10 @@ import scala.util.Random
   *    G3/G4).
   *  - The local join's candidates never become rows: each local-join
   *    task folds them into per-source top-k' buffers before anything
-  *    leaves it ([[partials]]), and the merge combines buffers — the
-  *    reference's `reduceByKey` map-side combine, done where the pairs
-  *    are made (REPOSE's partition-local top-k pruning).
+  *    leaves it ([[partials]]) — the reference's `reduceByKey` map-side
+  *    combine, done where the pairs are made (REPOSE's partition-local
+  *    top-k pruning) — and the merge exchanges the buffers by source
+  *    into the same fold ([[mergeBuffers]]).
   *  - All randomness is seeded per (node, iteration) — the reference used
   *    global unseeded `Random` in two places (`NND.scala:98,148`), which
   *    is nondeterministic under task retries; ours is retry-safe.
@@ -315,24 +316,19 @@ object NND {
     // lists are pruned like every later merge, so degree is bounded
     // from the first adjacency join on. Stable lists from `existing`
     // pass as-is (a pruned prior build's lists re-prune to themselves
-    // — Occlusion is idempotent). Returns the lists with the checkpoint
-    // BACKING them: from iteration 1 on, `active` is a map over the
-    // checkpointed `merged`, and release() must target the checkpointed
-    // frame itself (the bridge frees only a checkpoint-ROOTED plan —
-    // walking arbitrary plans for LogicalRDD leaves would also free
-    // checkpoints a caller composed in).
-    def pruned(lists: Dataset[FlaggedList], ck: Dataset[_]): (Dataset[FlaggedList], Dataset[_]) =
-      p.pruneAlpha match {
-        case None => (lists, ck)
-        case Some(a) =>
-          val (prunedLists, exchanged) = pruneFlagged(lists, nodes, a, p.pruneMaxDegree)
-          val pr = truncate(prunedLists, p.checkpointDir)
-          // pr is materialized; ck and the gather's table have no other reader
-          Seq(ck, exchanged).foreach(release)
-          (pr, pr)
+    // — Occlusion is idempotent). `lists` and the result are both
+    // checkpoints, so release() can free whichever the loop drops (the
+    // bridge frees only a checkpoint-ROOTED plan).
+    def pruned(lists: Dataset[FlaggedList]): Dataset[FlaggedList] =
+      p.pruneAlpha.fold(lists) { a =>
+        val (prunedLists, exchanged) = pruneFlagged(lists, nodes, a, p.pruneMaxDegree)
+        val pr = truncate(prunedLists, p.checkpointDir)
+        // pr is materialized; lists and the gather's table have no other reader
+        Seq(lists, exchanged).foreach(release)
+        pr
       }
     var stable = stable0
-    var (active, activeCk) = pruned(active0, active0)
+    var active = pruned(active0)
 
     var finished = false
     var iter = 0
@@ -364,7 +360,7 @@ object NND {
       // The per-node updated count rides in the merged result, so
       // convergence needs no accumulator (deterministic under task
       // retries).
-      val (merged, spent): (Dataset[(Long, TopKResult)], Seq[Dataset[_]]) = stable match {
+      val (merged, spent): (Dataset[FlaggedList], Seq[Dataset[_]]) = stable match {
         case None =>
           val oldBufs = partials(edges.map(e => Cand(e.src, e.dst, e.sim, isOld = true)), k)
           val (pairs, exchanged) = localJoin(adjInput)
@@ -433,16 +429,14 @@ object NND {
           stable = Some(newStable)
           (m, Seq(st, pairBufs, exchanged))
       }
-      val updates = merged.map(_._2.updated.toLong).toDF("u")
+      val updates = merged.map(_.isNew.count(identity).toLong).toDF("u")
         .agg(coalesce(sum($"u"), lit(0L))).as[Long].head()
       // Update counting happens on the UNPRUNED merge (an entry that
       // made the top-k' is an update whether or not occlusion then
       // drops it) — the δ semantics stay identical to the unpruned
       // path; the Params scaladoc documents the re-proposal caveat.
-      val prevActive = activeCk
-      val (newActive, newActiveCk) = pruned(merged.map(flagged), merged)
-      active = newActive
-      activeCk = newActiveCk
+      val prevActive = active
+      active = pruned(merged)
       (prevActive +: spent).foreach(release)
       iter += 1
 
@@ -627,7 +621,7 @@ object NND {
             case (b, id, f, part, fresh) => (BucketedNode(b, id, f, part), fresh)
           }, k))
     }
-    truncate(mergeBuffers(partials(initCands, k), k).map(flagged), p.checkpointDir)
+    truncate(mergeBuffers(partials(initCands, k), k), p.checkpointDir)
   }
 
   /** Final reassembly (reference J1 left outer join, NND.scala:274-278),
@@ -659,17 +653,16 @@ object NND {
 
   /** Bounded top-K neighbor-list merge with dedup-by-id where old (B)
     * entries win — the reference's A4/A7/W1 composite (`NND.scala:104-109,
-    * 228-242`) — over [[partials]]' buffers, via [[TopKMerge]]. Tie-break
-    * on (sim desc, dst asc) for determinism (the reference's stable sort
-    * order is shuffle-order-dependent). */
-  private def mergeBuffers(bufs: Dataset[(Long, TopKBuf)], k: Int): Dataset[(Long, TopKResult)] = {
+    * 228-242`), the reduce side of its `reduceByKey` — over [[partials]]'
+    * buffers: an exchange by source into the same slot fold
+    * ([[TopKAggregator.mergeTopK]]). Each task holds one slot per source
+    * it reads, outside Spark's memory manager. Tie-break on (sim desc,
+    * dst asc) for determinism (the reference's stable sort order is
+    * shuffle-order-dependent). */
+  private def mergeBuffers(bufs: Dataset[(Long, TopKBuf)], k: Int): Dataset[FlaggedList] = {
     import bufs.sparkSession.implicits._
-    bufs.groupByKey(_._1).agg(new TopKMerge(k).toColumn)
+    bufs.repartition($"_1").mapPartitions(it => TopKAggregator.mergeTopK(k)(it))
   }
-
-  /** A merged list as loop state: entries that were not old are new. */
-  private def flagged(g: (Long, TopKResult)): FlaggedList =
-    FlaggedList(g._1, g._2.neighbors, g._2.old.map(!_))
 
   /** Parameter gate shared by [[buildGraph]], [[updateGraph]] and
     * [[consolidateGraph]] — one definition so the three entry points

@@ -11,27 +11,23 @@ import scala.collection.mutable
   * deduped by dst with old-entry-wins flag merging, truncated to K. */
 final case class TopKBuf(dst: Array[Long], sim: Array[Double], old: Array[Boolean])
 
-/** Merged neighbor list, the per-entry old flags (`old(i)` = neighbor i
-  * survived from the previous iteration — the reference's B flag), and
-  * how many entries are new this iteration (the reference's per-node
-  * `updated` count, `NND.scala:244-246`). The flags drive the
-  * incremental local join: only pairs touching a NEW entry need
-  * evaluation next round (Dong et al. §2.3; reference NND.scala:228-242). */
+/** [[TopKAggregator]]'s result: the top-K list, the per-entry old
+  * flags (`old(i)` = entry i came from an old candidate — the
+  * reference's B flag), and how many entries are new (the reference's
+  * per-node `updated` count, `NND.scala:244-246`). */
 final case class TopKResult(neighbors: Seq[Neighbor], old: Seq[Boolean], updated: Int)
 
-/** Typed bounded top-K merge aggregator — the Spark-SQL equivalent of the
-  * reference's `reduceByKey` neighbor-list combine (A4/A7/W1,
-  * `/root/reference/src/main/scala/com/github/fvictorio/nnd/
-  * NND.scala:104-109,228-242`).
+/** Typed bounded top-K aggregator over candidates — the Spark-SQL
+  * equivalent of the reference's `reduceByKey` neighbor-list combine
+  * (A4/A7/W1, reference `NND.scala:104-109,228-242`). It serves the
+  * streaming ANN serve only, as its per-query state. NND does not
+  * aggregate: its local-join task folds candidates into per-source
+  * slots ([[TopKAggregator.partialTopK]]), and its merge exchanges those
+  * buffers by source and folds them again ([[TopKAggregator.mergeTopK]]).
   *
-  * `merge` and `finish` are the one top-K merge definition. NND's
-  * partial aggregation is not this aggregator's: it runs inside the
-  * local-join task, where [[TopKAggregator.partialTopK]] folds each
-  * candidate into its source's [[TopKSlot]], so candidates are never
-  * encoded as rows. NND's aggregate, [[TopKMerge]], then only merges
-  * those per-task buffers with the old lists. `reduce` (one `Cand` into
-  * a buffer, through the same slot) serves the streaming ANN serve,
-  * whose per-query state is this aggregator.
+  * [[TopKSlot]] is the one top-K rule, behind `reduce`, `merge` and
+  * both of NND's folds: (sim desc, dst asc) under `Double.compare`, an
+  * equal (sim, dst) ORs its old flag into the kept copy, keep K.
   *
   * Truncating partial buffers to K is exact: a candidate dropped from a
   * partial buffer is dominated by K better candidates that all reach the
@@ -46,55 +42,12 @@ final class TopKAggregator(k: Int) extends Aggregator[Cand, TopKBuf, TopKResult]
 
   override def zero: TopKBuf = TopKBuf(Array.empty, Array.empty, Array.empty)
 
-  override def reduce(b: TopKBuf, c: Cand): TopKBuf = {
-    // Dominant post-convergence case: the buffer is full and the
-    // candidate sorts strictly after its last entry — it can neither
-    // enter the list nor be a duplicate of anything kept (a duplicate
-    // has an IDENTICAL (sim, dst) and so never sorts strictly after
-    // the kept copy), so the result is `b` unchanged, not a copy.
-    val n = b.dst.length
-    if (n >= k && TopKAggregator.sortsAfter(c.sim, c.dst, b.sim(n - 1), b.dst(n - 1))) return b
-    val slot = TopKSlot.of(k, b)
-    slot.add(c.dst, c.sim, c.isOld)
-    slot.result
-  }
+  override def reduce(b: TopKBuf, c: Cand): TopKBuf = TopKSlot.plus(k, b, c.dst, c.sim, c.isOld)
 
   override def merge(a: TopKBuf, b: TopKBuf): TopKBuf = {
-    // Two-pointer merge of (sim desc, dst asc)-sorted runs with dedup by
-    // dst (old flag ORs — sim of duplicates is identical by construction).
-    // Ordering and the dedup equality go through Double.compare, NOT
-    // primitive </==: a NaN similarity (corrupt upstream features — the
-    // l2sim paths have no cosine_ranked-style guard) makes every
-    // primitive comparison false, which silently breaks the sorted-run
-    // invariant and lets duplicates escape dedup. Under compare's IEEE
-    // total order NaN sorts as the LARGEST value (first in the list,
-    // matching Spark's own sort order and Neighbors.assemble), so
-    // corrupt input yields a deterministic, structurally-valid list
-    // instead of silent corruption. Sims here are 1/(1+d) or -Inf —
-    // never -0.0 — so compare is bit-identical to the primitive ops on
-    // every valid input (pins unchanged).
-    val n = math.min(a.dst.length + b.dst.length, 2 * k)
-    val dst = new Array[Long](n)
-    val sim = new Array[Double](n)
-    val old = new Array[Boolean](n)
-    var i = 0; var j = 0; var o = 0
-    while (o < n && (i < a.dst.length || j < b.dst.length)) {
-      val takeA = j >= b.dst.length || (i < a.dst.length &&
-        !TopKAggregator.sortsAfter(a.sim(i), a.dst(i), b.sim(j), b.dst(j)))
-      val (d, s, ol) =
-        if (takeA) { val r = (a.dst(i), a.sim(i), a.old(i)); i += 1; r }
-        else { val r = (b.dst(j), b.sim(j), b.old(j)); j += 1; r }
-      // dedup: equal (sim, dst) neighbors are adjacent in the merged order
-      if (o > 0 && dst(o - 1) == d && java.lang.Double.compare(sim(o - 1), s) == 0) {
-        old(o - 1) = old(o - 1) || ol
-      } else if (o < k) {
-        dst(o) = d; sim(o) = s; old(o) = ol; o += 1
-      } else {
-        // beyond K and not a duplicate of the last kept entry: dominated
-        o = o // no-op; remaining inputs can still dedup against kept tail
-      }
-    }
-    TopKBuf(dst.take(o), sim.take(o), old.take(o))
+    val slot = TopKSlot.of(k, a)
+    b.dst.indices.foreach(i => slot.add(b.dst(i), b.sim(i), b.old(i)))
+    slot.result
   }
 
   override def finish(b: TopKBuf): TopKResult = {
@@ -108,34 +61,47 @@ final class TopKAggregator(k: Int) extends Aggregator[Cand, TopKBuf, TopKResult]
 
 object TopKAggregator {
 
-  /** (s, d) sorts strictly after (ls, ld) in the (sim desc, dst asc)
-    * order, under Double.compare's total order (see `merge`). */
-  private[nnd] def sortsAfter(s: Double, d: Long, ls: Double, ld: Long): Boolean = {
-    val cmp = java.lang.Double.compare(s, ls)
-    cmp < 0 || (cmp == 0 && d > ld)
-  }
-
   /** A task's partial top-K, for `mapPartitions` directly on a `Cand`
     * producer: Catalyst's EliminateSerialization then hands the
     * producer's objects straight to this fold, so no candidate is
     * encoded. Each candidate goes into its source's [[TopKSlot]], and at
     * the end of the partition every slot is emitted as one
-    * `(src, buffer)` row. The slots live outside Spark's memory manager
-    * and are not bounded: a local-join candidate's source is any group
-    * member, so a task holds about one slot per node. */
+    * `(src, buffer)` row, in source order: sorted rows compress better
+    * in the exchange that follows (perfbench build, seed 1: 29.60 MB in
+    * source order, 29.77 MB in the map's hash order). The slots live
+    * outside Spark's memory manager and are not bounded: a local-join
+    * candidate's source is any group member, so a task holds about one
+    * slot per node. */
   private[nnd] def partialTopK(k: Int)(cands: Iterator[Cand]): Iterator[(Long, TopKBuf)] = {
     val slots = new mutable.LongMap[TopKSlot]()
     cands.foreach(c => slots.getOrElseUpdate(c.src, new TopKSlot(k)).add(c.dst, c.sim, c.isOld))
-    slots.iterator.map { case (src, slot) => (src, slot.result) }
+    slots.keys.toArray.sorted.iterator.map(src => (src, slots(src).result))
   }
+
+  /** A merge task's top-K lists: [[partialTopK]] over the entries of
+    * every `(src, buffer)` row it reads, whatever their order and
+    * however a source's entries are split across rows; entries that
+    * were not old are new. */
+  private[nnd] def mergeTopK(k: Int)(bufs: Iterator[(Long, TopKBuf)]): Iterator[FlaggedList] =
+    partialTopK(k)(bufs.flatMap { case (src, b) =>
+      b.dst.indices.iterator.map(i => Cand(src, b.dst(i), b.sim(i), b.old(i)))
+    }).map { case (src, b) =>
+      FlaggedList(src, b.dst.indices.map(i => Neighbor(b.dst(i), b.sim(i))), b.old.toSeq.map(!_))
+    }
 }
 
-/** One source's top-K buffer, mutable and primitive: the one insert
-  * routine, behind both [[TopKAggregator]]'s `reduce` and the local
-  * join's [[TopKAggregator.partialTopK]]. Order (sim desc, dst asc under
-  * Double.compare) and dedup (an equal (sim, dst) ORs its old flag into
-  * the kept copy) are `merge`'s, so any input order folds to a sorted,
-  * deduplicated buffer. */
+/** One source's top-K buffer, mutable and primitive: the one top-K
+  * rule. Order is (sim desc, dst asc) under `Double.compare`, NOT
+  * primitive </==: a NaN similarity (corrupt upstream features — the
+  * l2sim paths have no cosine_ranked-style guard) makes every primitive
+  * comparison false, which would break the order and let duplicates
+  * escape dedup. Under compare's IEEE total order NaN sorts as the
+  * LARGEST value (first in the list, matching Spark's own sort order
+  * and Neighbors.assemble), so corrupt input yields a deterministic,
+  * structurally valid list. Sims here are 1/(1+d) or -Inf — never -0.0
+  * — so compare agrees with the primitive ops on every valid input.
+  * Dedup: an equal (sim, dst) ORs its old flag into the kept copy. Any
+  * input order folds to the same sorted, deduplicated buffer. */
 private[nnd] final class TopKSlot(k: Int) {
   private val dst = new Array[Long](k)
   private val sim = new Array[Double](k)
@@ -144,9 +110,9 @@ private[nnd] final class TopKSlot(k: Int) {
 
   def add(d: Long, s: Double, o: Boolean): Unit =
     // full, and the candidate sorts after the last entry: dominated
-    if (n < k || !TopKAggregator.sortsAfter(s, d, sim(n - 1), dst(n - 1))) {
+    if (n < k || !TopKSlot.sortsAfter(s, d, sim(n - 1), dst(n - 1))) {
       var i = 0
-      while (i < n && TopKAggregator.sortsAfter(s, d, sim(i), dst(i))) i += 1
+      while (i < n && TopKSlot.sortsAfter(s, d, sim(i), dst(i))) i += 1
       if (i < n && dst(i) == d && java.lang.Double.compare(sim(i), s) == 0) {
         old(i) = old(i) || o
       } else {
@@ -165,8 +131,15 @@ private[nnd] final class TopKSlot(k: Int) {
 
 private[nnd] object TopKSlot {
 
+  /** (s, d) sorts strictly after (ls, ld): (sim desc, dst asc) under
+    * Double.compare's total order. */
+  private def sortsAfter(s: Double, d: Long, ls: Double, ld: Long): Boolean = {
+    val cmp = java.lang.Double.compare(s, ls)
+    cmp < 0 || (cmp == 0 && d > ld)
+  }
+
   /** A slot holding `b`, which must already be sorted, deduplicated and
-    * at most K long — every buffer the aggregator makes is. */
+    * at most K long — every buffer a slot makes is. */
   def of(k: Int, b: TopKBuf): TopKSlot = {
     val slot = new TopKSlot(k)
     val m = b.dst.length
@@ -176,19 +149,15 @@ private[nnd] object TopKSlot {
     slot.n = m
     slot
   }
-}
 
-/** NND's top-K merge over `(src, buffer)` rows — the per-task partials of
-  * [[TopKAggregator.partialTopK]] and the old lists' buffers: the
-  * aggregator's `merge` and `finish`, with buffers in place of
-  * candidates. */
-private[nnd] final class TopKMerge(k: Int)
-    extends Aggregator[(Long, TopKBuf), TopKBuf, TopKResult] {
-  private val topK = new TopKAggregator(k)
-  override def zero: TopKBuf = topK.zero
-  override def reduce(b: TopKBuf, p: (Long, TopKBuf)): TopKBuf = topK.merge(b, p._2)
-  override def merge(a: TopKBuf, b: TopKBuf): TopKBuf = topK.merge(a, b)
-  override def finish(b: TopKBuf): TopKResult = topK.finish(b)
-  override def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-  override def outputEncoder: Encoder[TopKResult] = Encoders.product[TopKResult]
+  /** `b` with one entry added. The dominant post-convergence case — `b`
+    * is full and the entry sorts strictly after its last one — returns
+    * `b` itself, not a copy: the entry can neither enter the list nor
+    * duplicate a kept entry (a duplicate has an IDENTICAL (sim, dst) and
+    * so never sorts strictly after the kept copy). */
+  def plus(k: Int, b: TopKBuf, d: Long, s: Double, o: Boolean): TopKBuf = {
+    val n = b.dst.length
+    if (n >= k && sortsAfter(s, d, b.sim(n - 1), b.dst(n - 1))) b
+    else { val slot = of(k, b); slot.add(d, s, o); slot.result }
+  }
 }

@@ -21,12 +21,12 @@ import graft.ops.SimilaritySearch
   *    projection — legal on a stream), a stream-static equi-join on
   *    `cell` (no stream state), and a cosine projection: exactly the
   *    batch plan with the query side swapped for the stream.
-  *  - Per-query top-k is the bounded [[TopKAggregator]] — the same
-  *    mergeable ≤k-row state that backs the NND build (A4), here as
-  *    STREAMING aggregation state: k rows per query key, forever,
-  *    regardless of how many micro-batches contribute candidates. A
-  *    `collect_list`-then-sort formulation would hold every candidate
-  *    ever seen per query; this holds k.
+  *  - Per-query top-k is the bounded [[TopKAggregator]] — mergeable
+  *    ≤k-row state under the same top-k rule as the NND build's
+  *    merge (A4), here as STREAMING aggregation state: k rows per
+  *    query key, forever, regardless of how many micro-batches
+  *    contribute candidates. A `collect_list`-then-sort formulation
+  *    would hold every candidate ever seen per query; this holds k.
   *
   * Determinism: candidates are generated per (query, probed cell) and
   * cells partition the corpus, so each (query, nbr) pair is scored at

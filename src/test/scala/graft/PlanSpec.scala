@@ -123,6 +123,31 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("NND merge: per-task buffers exchange by source into the slot fold, " +
+      "with no aggregate or sort") {
+    import org.apache.spark.sql.functions.col
+    val plans = capturedPlans {
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+        .select(col("vec_id").as("id"), col("embedding").as("features"))
+      graft.nnd.NND.buildGraph(emb, graft.nnd.NND.Params(k = 5, maxIterations = 1)).count()
+    }
+    // A merge plan reads the per-task top-k fold, whose rows are
+    // (src, buffer) tuples; the merge is everything above that fold.
+    val fold = "MapPartitions .*obj#\\d+: scala\\.Tuple2".r
+    val merges = plans.map(_.split("== Initial Plan ==").head.split("\n"))
+      .filter(_.exists(fold.findFirstIn(_).isDefined))
+      .map(lines => lines.takeWhile(fold.findFirstIn(_).isEmpty).mkString("\n"))
+    // One merge for the init draws, one for iteration 1.
+    assert(merges.size == 2, s"expected 2 merge plans, got:\n${merges.mkString("\n---\n")}")
+    merges.foreach { m =>
+      Seq("ObjectHashAggregate", "SortAggregate", "Sort [").foreach { op =>
+        assert(!m.contains(op), s"the merge plans $op:\n$m")
+      }
+      assert(m.contains("Exchange hashpartitioning(_1"),
+        s"the merge does not exchange the buffers by source:\n$m")
+    }
+  }
+
   test("bucketed tables co-locate the join: no exchange before the sort-merge") {
     import org.apache.spark.sql.functions._
     val o = Queries.t(spark, sf0001, "orders")

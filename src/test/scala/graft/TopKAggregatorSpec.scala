@@ -4,16 +4,22 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests for the bounded top-K merge. Spark's partial
-  * aggregation applies `merge` in an arbitrary tree order decided by
-  * partitioning and task scheduling, so the NND graph is only
-  * deterministic if the merge is associative, commutative, and
-  * truncation-stable. These properties ARE the correctness argument for
-  * map-side combining (TopKAggregator scaladoc); here they are checked
-  * mechanically against 500 randomized inputs each instead of argued.
-  * NND's map-side combine is the local-join task's slot map
-  * (`TopKAggregator.partialTopK`), so the slot map is checked against
-  * the same reference and bit for bit against `reduce`.
+/** Property tests for the bounded top-K rule, [[TopKSlot]].
+  *
+  * The streaming ANN serve aggregates with [[TopKAggregator]], and
+  * Spark's partial aggregation applies its slot-based `merge` in an
+  * arbitrary tree order decided by partitioning and task scheduling, so
+  * the serve is only deterministic if `merge` is associative,
+  * commutative and truncation-stable. These properties ARE the
+  * correctness argument for map-side combining (TopKAggregator
+  * scaladoc); here they are checked mechanically against 500
+  * randomized inputs each instead of argued.
+  *
+  * NND does not use Spark's partial aggregation. Its local-join task
+  * folds candidates into a slot map (`TopKAggregator.partialTopK`), and
+  * its merge exchanges those buffers by source into the same fold
+  * (`TopKAggregator.mergeTopK`). Both are checked against the same
+  * reference and bit for bit against `reduce`.
   */
 class TopKAggregatorSpec extends AnyFunSuite {
 
@@ -59,6 +65,14 @@ class TopKAggregatorSpec extends AnyFunSuite {
     case Seq() => agg.zero
     case Seq((_, b)) => b
   }
+
+  /** One merge task's lists of `rows`, as NND makes them, back in
+    * buffer form (an entry that is not new is old). */
+  private def merged(rows: Seq[(Long, TopKBuf)]): Seq[(Long, TopKBuf)] =
+    TopKAggregator.mergeTopK(K)(rows.iterator).map { l =>
+      (l.id, TopKBuf(l.neighbors.map(_.id).toArray, l.neighbors.map(_.similarity).toArray,
+        l.isNew.map(!_).toArray))
+    }.toSeq
 
   private def canon(b: TopKBuf): (Seq[Long], Seq[Double], Seq[Boolean]) =
     (b.dst.toSeq, b.sim.toSeq, b.old.toSeq)
@@ -156,16 +170,33 @@ class TopKAggregatorSpec extends AnyFunSuite {
 
   test("an unsorted, duplicated old list through the slot merges like its candidates") {
     // Lists from a caller's existing graph carry no order or dedup
-    // guarantee; the merge needs sorted, deduplicated runs.
+    // guarantee; the merge folds every entry, so it needs neither.
     samples(Rounds).grouped(2).collect { case Seq(xs, ys) =>
       val oldList = xs.map(_.copy(isOld = true))
-      val merged = new TopKMerge(K)
-      val got = merged.reduce(merged.reduce(merged.zero, (0L, slot(oldList))), (0L, slot(ys)))
+      val raw = TopKBuf(oldList.map(_.dst).toArray, oldList.map(_.sim).toArray,
+        oldList.map(_.isOld).toArray)
+      val got = merged(Seq((0L, raw), (0L, slot(ys)))) match {
+        case Seq() => agg.zero
+        case Seq((_, b)) => b
+      }
       val want = reference(oldList ++ ys)
       assert(canon(got) == ((want.map(_._1), want.map(_._2), want.map(_._3))),
         s"inputs: $oldList / $ys")
       assert(bits(got) == bits(fold(oldList ++ ys)), s"inputs: $oldList / $ys")
     }.toList
+  }
+
+  test("per-task partials, exchanged in any row order, merge to each source's fold") {
+    samples(Rounds, multiSrcGen).zipWithIndex.foreach { case (cs, i) =>
+      val rnd = new scala.util.Random(i.toLong)
+      val tasks = cs.groupBy(_ => rnd.nextInt(4)).values.toSeq
+      val rows = rnd.shuffle(tasks.flatMap(partials))
+      val got = merged(rows)
+      assert(got.map(_._1).sorted == cs.map(_.src).distinct.sorted, s"input: $cs")
+      got.foreach { case (src, b) =>
+        assert(bits(b) == bits(fold(cs.filter(_.src == src))), s"source $src of: $cs")
+      }
+    }
   }
 
   test("the slot map keeps one buffer per source, bit-equal to that source's fold") {
