@@ -34,11 +34,14 @@ import scala.util.Random
   *    broadcast, the join is a sort-merge join and features cross the
   *    wire once per grouping, into the group exchange (the reference's
   *    G3/G4).
-  *  - The local join's candidates never become rows: each local-join
-  *    task folds them into per-source top-k' buffers before anything
-  *    leaves it ([[partials]]) — the reference's `reduceByKey` map-side
-  *    combine, done where the pairs are made (REPOSE's partition-local
-  *    top-k pruning) — and the merge exchanges the buffers by source
+  *  - One list shape, `(src, TopKBuf)` with `old(i)` = entry i is not
+  *    new: the loop state, the init lists, the prune output and the
+  *    merge's input and output. The local join's candidates never become
+  *    rows: each local-join task folds them into per-source top-k'
+  *    buffers before anything leaves it ([[partials]]) — the
+  *    reference's `reduceByKey` map-side combine, done where the pairs
+  *    are made (REPOSE's partition-local top-k pruning) — and the merge
+  *    exchanges those buffers and the old lists, as they are, by source
   *    into the same fold ([[mergeBuffers]]).
   *  - All randomness is seeded per (node, iteration) — the reference used
   *    global unseeded `Random` in two places (`NND.scala:98,148`), which
@@ -62,10 +65,6 @@ private[nnd] final case class AdjRow(
 /** A list entry of `src` with its features: the in-loop prune's row. */
 private[nnd] final case class PruneRow(
     src: Long, dst: Long, sim: Double, isNew: Boolean, features: Array[Float])
-/** Neighbor list with per-entry new flags (true = entered the list this
-  * iteration) — the state the incremental local join needs. */
-private[nnd] final case class FlaggedList(id: Long, neighbors: Seq[Neighbor], isNew: Seq[Boolean])
-private[nnd] final case class FlaggedEdge(src: Long, dst: Long, sim: Double, isNew: Boolean)
 
 object NND {
 
@@ -262,7 +261,7 @@ object NND {
     // All new: no prior list survives, so nothing is stable and the
     // update is a build (dense body, every bucket, every member draws).
     val increment = if (newCount == counts.values.sum) None else Some(newIds)
-    val stable = increment.map(_ => allOld(
+    val stable = increment.map(_ => stableOf(
       priorLists.toDF().join(nodes.toDF().select($"id"), Seq("id"), "left_semi"), p))
     reassemble(base, nodes, p, Some(refineLoop(nodes, stable,
       initLists(nodes, counts, increment, p), math.max(1L, newCount), p)))
@@ -283,14 +282,17 @@ object NND {
     *    `active0`'s lists (those holding >= 1 fresh entry), only groups
     *    with a new member local-join, only nodes that received
     *    candidates re-merge, and untouched actives retire to stable.
-    * Returns stable ∪ active after convergence — internal k'-wide
-    * lists, flags dropped by [[reassemble]]. */
+    * Every list set is `(src, TopKBuf)` rows; an entry whose `old` flag
+    * is false is new. Old lists enter each merge as they are, all-old
+    * ([[allOld]]): the merge's fold sorts, dedups and truncates every
+    * entry it reads. Returns stable ∪ active after convergence —
+    * internal k'-wide lists, flags dropped by [[reassemble]]. */
   private def refineLoop(
       nodes: Dataset[NodeRow],
-      stable0: Option[Dataset[FlaggedList]],
-      active0: Dataset[FlaggedList],
+      stable0: Option[Dataset[(Long, TopKBuf)]],
+      active0: Dataset[(Long, TopKBuf)],
       normCount: Long,
-      p: Params): Dataset[FlaggedList] = {
+      p: Params): Dataset[(Long, TopKBuf)] = {
     import nodes.sparkSession.implicits._
     val k = buildWidth(p)
     // A §3.2 Bloom pre-filter on the features probe side of the
@@ -319,7 +321,7 @@ object NND {
     // — Occlusion is idempotent). `lists` and the result are both
     // checkpoints, so release() can free whichever the loop drops (the
     // bridge frees only a checkpoint-ROOTED plan).
-    def pruned(lists: Dataset[FlaggedList]): Dataset[FlaggedList] =
+    def pruned(lists: Dataset[(Long, TopKBuf)]): Dataset[(Long, TopKBuf)] =
       p.pruneAlpha.fold(lists) { a =>
         val (prunedLists, exchanged) = pruneFlagged(lists, nodes, a, p.pruneMaxDegree)
         val pr = truncate(prunedLists, p.checkpointDir)
@@ -335,11 +337,8 @@ object NND {
     while (!finished && iter < p.maxIterations) {
       // Forward edges from ACTIVE lists only (all, in the dense body) —
       // new entries can only live there; converged old<->old stays put.
-      val edges: Dataset[FlaggedEdge] =
-        active.flatMap(nl => nl.neighbors.iterator.zip(nl.isNew.iterator)
-          .map { case (nb, fresh) => FlaggedEdge(nl.id, nb.id, nb.similarity, fresh) })
-      val adjInput = edges.toDF().select($"src", $"dst", $"isNew")
-        .union(sampleReverse(edges, p.sampleRate, iter, p.seed))
+      val edges = edgesOf(active)
+      val adjInput = edges.union(sampleReverse(edges, p.sampleRate, iter, p.seed))
 
       // Adjacency set Av = Bv ∪ sample(Rv) (reference G4): the narrow
       // (src, dst, isNew) rows are exchanged by src, then each member's
@@ -360,11 +359,10 @@ object NND {
       // The per-node updated count rides in the merged result, so
       // convergence needs no accumulator (deterministic under task
       // retries).
-      val (merged, spent): (Dataset[FlaggedList], Seq[Dataset[_]]) = stable match {
+      val (merged, spent): (Dataset[(Long, TopKBuf)], Seq[Dataset[_]]) = stable match {
         case None =>
-          val oldBufs = partials(edges.map(e => Cand(e.src, e.dst, e.sim, isOld = true)), k)
           val (pairs, exchanged) = localJoin(adjInput)
-          (truncate(mergeBuffers(pairs.union(oldBufs), k), p.checkpointDir),
+          (truncate(mergeBuffers(pairs.union(active.map(allOld)), k), p.checkpointDir),
             Seq(exchanged))
         case Some(st) =>
           // Only adjacency groups with a NEW member generate pairs; carve
@@ -387,11 +385,8 @@ object NND {
           // their old halves via `edges`; this is the stable carve-out's
           // missing counterpart, and it stays cascade-sized: only lists of
           // srcs that actually received a new member are pulled in.
-          val stableOldEdges = st.toDF()
-            .join(activeSrcs.select($"src".as("id")), Seq("id"), "left_semi")
-            .as[FlaggedList]
-            .flatMap(nl => nl.neighbors.iterator.map(nb => (nl.id, nb.id, false)))
-            .toDF("src", "dst", "isNew")
+          val stableOldEdges = edgesOf(
+            st.join(activeSrcs.select($"src".as("_1")), Seq("_1"), "left_semi").as[(Long, TopKBuf)])
 
           // The O(|Av|²) local join is the iteration's dominant compute and
           // feeds THREE consumers (merge input, targets for the carve-outs,
@@ -407,29 +402,25 @@ object NND {
           // Re-merge ONLY nodes that received candidates; everyone else's
           // list is carried untouched via semi/anti joins on the
           // (typically increment-sized) target set.
-          val targets = pairBufs.toDF().select($"_1".as("id")).distinct()
-          def byTargets(lists: Dataset[FlaggedList], how: String): Dataset[FlaggedList] =
-            lists.toDF().join(targets, Seq("id"), how).as[FlaggedList]
-          val oldBufs = partials(
-            byTargets(st, "left_semi").unionByName(byTargets(active, "left_semi"))
-              .flatMap(nl => nl.neighbors.iterator
-                .map(nb => Cand(nl.id, nb.id, nb.similarity, isOld = true))), k)
+          val targets = pairBufs.select($"_1").distinct()
+          def byTargets(lists: Dataset[(Long, TopKBuf)], how: String): Dataset[(Long, TopKBuf)] =
+            lists.join(targets, Seq("_1"), how).as[(Long, TopKBuf)]
+          val oldBufs = byTargets(st, "left_semi").union(byTargets(active, "left_semi")).map(allOld)
 
           // Untouched actives have been fully exploited — retire to stable
           // with flags dropped; stable loses any node the merge re-emitted.
-          val retired = byTargets(active, "left_anti")
-            .map(nl => FlaggedList(nl.id, nl.neighbors, nl.neighbors.map(_ => false)))
+          val retired = byTargets(active, "left_anti").map(allOld)
           // The merge and the stable-set rebuild read only the ALREADY
           // materialized pairBufs/stable/active checkpoints and are
           // independent of each other — overlap their truncation jobs
           // (guide §2.6; per-frame contents unchanged).
           val (m, newStable) = graft.core.Par.pair(
             truncate(mergeBuffers(pairBufs.union(oldBufs), k), p.checkpointDir),
-            truncate(byTargets(st, "left_anti").unionByName(retired), p.checkpointDir))
+            truncate(byTargets(st, "left_anti").union(retired), p.checkpointDir))
           stable = Some(newStable)
           (m, Seq(st, pairBufs, exchanged))
       }
-      val updates = merged.map(_.isNew.count(identity).toLong).toDF("u")
+      val updates = merged.map(_._2.old.count(!_).toLong).toDF("u")
         .agg(coalesce(sum($"u"), lit(0L))).as[Long].head()
       // Update counting happens on the UNPRUNED merge (an entry that
       // made the top-k' is an update whether or not occlusion then
@@ -444,7 +435,7 @@ object NND {
       finished = updates.toDouble / (k.toDouble * normCount.toDouble) <= p.earlyTermination
     }
 
-    stable.fold(active)(_.unionByName(active))
+    stable.fold(active)(_.union(active))
   }
 
   /** Consolidation refinement of an APPENDED graph — the scheduled
@@ -495,12 +486,12 @@ object NND {
       .select("id").distinct()
       .unionByName(lists.select("id").join(fresh, Seq("id"), "left_semi"))
       .distinct()
-    val stable0 = allOld(lists.join(activeIds, Seq("id"), "left_anti"), p)
+    val stable0 = stableOf(lists.join(activeIds, Seq("id"), "left_anti"), p)
 
     // Per-entry fresh flags for the active lists, order-preserving
     // (posexplode + sort-by-pos regroup keeps the stored
     // (sim desc, id asc) list order bit-exact).
-    val active0: Dataset[FlaggedList] = truncate(
+    val active0: Dataset[(Long, TopKBuf)] = truncate(
       lists.join(activeIds, Seq("id"), "left_semi")
         .join(fresh.withColumn("owner_fresh", lit(true)), Seq("id"), "left_outer")
         .withColumn("owner_fresh", coalesce(col("owner_fresh"), lit(false)))
@@ -514,7 +505,7 @@ object NND {
         .groupByKey(_._1)
         .mapGroups { (id, it) =>
           val rows = it.toArray.sortBy(_._2)
-          FlaggedList(id, rows.map(_._3).toIndexedSeq, rows.map(_._4).toIndexedSeq)
+          (id, TopKBuf(rows.map(_._3.id), rows.map(_._3.similarity), rows.map(!_._4)))
         },
       p.checkpointDir)
 
@@ -561,11 +552,23 @@ object NND {
     nodes.groupBy($"partition").count().as[(Long, Long)].collect().toMap
   }
 
-  /** Lists with no fresh entry (the stable set), truncated. */
-  private def allOld(lists: DataFrame, p: Params): Dataset[FlaggedList] = {
+  /** Graph lists as buffers with no fresh entry (the stable set),
+    * truncated. */
+  private def stableOf(lists: DataFrame, p: Params): Dataset[(Long, TopKBuf)] = {
     import lists.sparkSession.implicits._
-    truncate(lists.as[NeighborList]
-      .map(nl => FlaggedList(nl.id, nl.neighbors, nl.neighbors.map(_ => false))), p.checkpointDir)
+    truncate(lists.as[NeighborList].map(nl => (nl.id, TopKBuf(nl.neighbors.map(_.id).toArray,
+      nl.neighbors.map(_.similarity).toArray, Array.fill(nl.neighbors.size)(true)))), p.checkpointDir)
+  }
+
+  /** A list with every entry old. */
+  private def allOld(l: (Long, TopKBuf)): (Long, TopKBuf) =
+    (l._1, l._2.copy(old = Array.fill(l._2.dst.length)(true)))
+
+  /** A list set's entries as `(src, dst, isNew)` rows. */
+  private def edgesOf(lists: Dataset[(Long, TopKBuf)]): DataFrame = {
+    import lists.sparkSession.implicits._
+    lists.flatMap { case (src, b) => b.dst.indices.iterator.map(i => (src, b.dst(i), !b.old(i))) }
+      .toDF("src", "dst", "isNew")
   }
 
   /** Internal build width k' (K-expansion; output truncates to p.k). */
@@ -586,7 +589,7 @@ object NND {
     * broadcast relation lands in the task of the gather's sort), and with
     * broadcast joins off build shuffle rose 57.8 → 58.4 MB. */
   private def initLists(nodes: Dataset[NodeRow], counts: Map[Long, Long],
-      newIds: Option[DataFrame], p: Params): Dataset[FlaggedList] = {
+      newIds: Option[DataFrame], p: Params): Dataset[(Long, TopKBuf)] = {
     import nodes.sparkSession.implicits._
     val k = buildWidth(p)
     val bcCounts = nodes.sparkSession.sparkContext.broadcast(counts)
@@ -628,12 +631,14 @@ object NND {
     * lists truncated to k; all-null when `lists` is None (nothing left
     * to graph). Unpersists the node table. */
   private def reassemble(base: DataFrame, nodes: Dataset[NodeRow], p: Params,
-      lists: Option[Dataset[FlaggedList]]): DataFrame = {
+      lists: Option[Dataset[(Long, TopKBuf)]]): DataFrame = {
     import base.sparkSession.implicits._
     val result = lists match {
       case None => base.withColumn("neighbors", lit(null).cast(ListType))
       case Some(l) => base.join(
-        l.map(nl => NeighborList(nl.id, nl.neighbors.take(p.k)))
+        l.map { case (src, b) =>
+          NeighborList(src, b.dst.indices.take(p.k).map(i => Neighbor(b.dst(i), b.sim(i))))
+        }
           .toDF().select($"id", $"neighbors"),
         Seq("id"), "left_outer")
     }
@@ -645,7 +650,9 @@ object NND {
     * row per source and task ([[TopKAggregator.partialTopK]]) — the
     * map-side half of the reference's `reduceByKey` combine. Placed
     * directly on the `Cand` producer (a group function, a flatMap), so
-    * the candidates pass to the fold as objects and are never encoded. */
+    * the candidates pass to the fold as objects and are never encoded.
+    * Only fresh candidates need it: old lists are buffers already and
+    * enter [[mergeBuffers]] as they are. */
   private def partials(cands: Dataset[Cand], k: Int): Dataset[(Long, TopKBuf)] = {
     import cands.sparkSession.implicits._
     cands.mapPartitions(it => TopKAggregator.partialTopK(k)(it))
@@ -654,12 +661,13 @@ object NND {
   /** Bounded top-K neighbor-list merge with dedup-by-id where old (B)
     * entries win — the reference's A4/A7/W1 composite (`NND.scala:104-109,
     * 228-242`), the reduce side of its `reduceByKey` — over [[partials]]'
-    * buffers: an exchange by source into the same slot fold
-    * ([[TopKAggregator.mergeTopK]]). Each task holds one slot per source
-    * it reads, outside Spark's memory manager. Tie-break on (sim desc,
-    * dst asc) for determinism (the reference's stable sort order is
-    * shuffle-order-dependent). */
-  private def mergeBuffers(bufs: Dataset[(Long, TopKBuf)], k: Int): Dataset[FlaggedList] = {
+    * buffers and old lists as they are: an exchange by source into the
+    * same slot fold ([[TopKAggregator.mergeTopK]]), which reads every
+    * entry, so an input list need not be sorted, deduplicated or k' wide.
+    * Each task holds one slot per source it reads, outside Spark's memory
+    * manager. Tie-break on (sim desc, dst asc) for determinism (the
+    * reference's stable sort order is shuffle-order-dependent). */
+  private def mergeBuffers(bufs: Dataset[(Long, TopKBuf)], k: Int): Dataset[(Long, TopKBuf)] = {
     import bufs.sparkSession.implicits._
     bufs.repartition($"_1").mapPartitions(it => TopKAggregator.mergeTopK(k)(it))
   }
@@ -701,19 +709,17 @@ object NND {
     * persisted `nodes` table itself. A per-iteration row-preserving
     * left-join would re-pay an id-sized shuffle per loop turn to
     * defend a state the loop cannot produce. */
-  private def pruneFlagged(g: Dataset[FlaggedList], nodes: Dataset[NodeRow],
-      alpha: Double, maxDegree: Int): (Dataset[FlaggedList], DataFrame) = {
+  private def pruneFlagged(g: Dataset[(Long, TopKBuf)], nodes: Dataset[NodeRow],
+      alpha: Double, maxDegree: Int): (Dataset[(Long, TopKBuf)], DataFrame) = {
     import g.sparkSession.implicits._
-    val edges = g.flatMap(nl => nl.neighbors.iterator.zip(nl.isNew.iterator)
-      .map { case (nb, fresh) => (nl.id, nb.id, nb.similarity, fresh) })
-      .toDF("src", "dst", "sim", "isNew")
-    gather[PruneRow, FlaggedList](edges, "src", "dst", nodes) { (src, it) =>
+    val edges = g.flatMap { case (src, b) =>
+      b.dst.indices.iterator.map(i => (src, b.dst(i), b.sim(i), !b.old(i)))
+    }.toDF("src", "dst", "sim", "isNew")
+    gather[PruneRow, (Long, TopKBuf)](edges, "src", "dst", nodes) { (src, it) =>
       val a = it.toArray.sortBy(c => (-c.sim, c.dst))
       val keep = graft.core.Occlusion.keepIndices(
         a.map(_.sim), a.map(_.features), alpha, maxDegree)
-      Iterator.single(FlaggedList(src,
-        keep.toSeq.map(i => Neighbor(a(i).dst, a(i).sim)),
-        keep.toSeq.map(i => a(i).isNew)))
+      Iterator.single((src, TopKBuf(keep.map(a(_).dst), keep.map(a(_).sim), keep.map(!a(_).isNew))))
     }
   }
 
@@ -775,13 +781,13 @@ object NND {
     * held in NNDSpec at ρ = 0.5). Reverse edges inherit the forward edge's
     * new/old flag (Dong et al.: new'[v] includes sampled reverse-new,
     * old'[v] reverse-old). */
-  private def sampleReverse(edges: Dataset[FlaggedEdge], rate: Double,
+  private def sampleReverse(edges: DataFrame, rate: Double,
       iter: Int, seed: Long): DataFrame = {
     import edges.sparkSession.implicits._
     if (rate >= 1.0)
-      edges.toDF().select($"dst".as("src"), $"src".as("dst"), $"isNew")
+      edges.select($"dst".as("src"), $"src".as("dst"), $"isNew")
     else {
-      val tagged = edges.toDF()
+      val tagged = edges
         .withColumn("h", xxhash64($"src", $"dst", lit(iter), lit(seed)))
       val stats = tagged.groupBy($"dst")
         .agg(count(lit(1)).as("cnt"), min($"h").as("hmin"))

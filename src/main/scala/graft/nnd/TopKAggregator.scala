@@ -1,6 +1,7 @@
 package graft.nnd
 
 import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
 import graft.core.Neighbor
@@ -8,22 +9,26 @@ import graft.core.Neighbor
 import scala.collection.mutable
 
 /** Bounded top-K buffer: parallel arrays sorted by (sim desc, dst asc),
-  * deduped by dst with old-entry-wins flag merging, truncated to K. */
+  * deduped by dst with old-entry-wins flag merging, truncated to K.
+  * `old(i)` = entry i came from an old candidate (the reference's B
+  * flag); an entry that is not old is new. Every buffer a [[TopKSlot]]
+  * makes has that form; NND's lists read from a caller's graph need not,
+  * and its merge normalises them ([[TopKAggregator.mergeTopK]]). */
 final case class TopKBuf(dst: Array[Long], sim: Array[Double], old: Array[Boolean])
-
-/** [[TopKAggregator]]'s result: the top-K list, the per-entry old
-  * flags (`old(i)` = entry i came from an old candidate — the
-  * reference's B flag), and how many entries are new (the reference's
-  * per-node `updated` count, `NND.scala:244-246`). */
-final case class TopKResult(neighbors: Seq[Neighbor], old: Seq[Boolean], updated: Int)
 
 /** Typed bounded top-K aggregator over candidates — the Spark-SQL
   * equivalent of the reference's `reduceByKey` neighbor-list combine
   * (A4/A7/W1, reference `NND.scala:104-109,228-242`). It serves the
-  * streaming ANN serve only, as its per-query state. NND does not
-  * aggregate: its local-join task folds candidates into per-source
-  * slots ([[TopKAggregator.partialTopK]]), and its merge exchanges those
-  * buffers by source and folds them again ([[TopKAggregator.mergeTopK]]).
+  * streaming ANN serve only, as its per-query state, and finishes to
+  * the neighbors alone. NND does not aggregate: its local-join task
+  * folds candidates into per-source slots
+  * ([[TopKAggregator.partialTopK]]), and its merge exchanges those
+  * buffers and the old lists by source and folds them again
+  * ([[TopKAggregator.mergeTopK]]).
+  *
+  * [[TopKBuf]] is the one list shape: this aggregator's state, the
+  * slot's result, and every list of NND's loop as `(src, TopKBuf)`
+  * rows, a buffer and its source.
   *
   * [[TopKSlot]] is the one top-K rule, behind `reduce`, `merge` and
   * both of NND's folds: (sim desc, dst asc) under `Double.compare`, an
@@ -38,7 +43,7 @@ final case class TopKResult(neighbors: Seq[Neighbor], old: Seq[Boolean], updated
   * (sim, dst) entries with their copies' old flags OR'd, whatever the
   * order and the split of the input.
   */
-final class TopKAggregator(k: Int) extends Aggregator[Cand, TopKBuf, TopKResult] {
+final class TopKAggregator(k: Int) extends Aggregator[Cand, TopKBuf, Seq[Neighbor]] {
 
   override def zero: TopKBuf = TopKBuf(Array.empty, Array.empty, Array.empty)
 
@@ -50,13 +55,11 @@ final class TopKAggregator(k: Int) extends Aggregator[Cand, TopKBuf, TopKResult]
     slot.result
   }
 
-  override def finish(b: TopKBuf): TopKResult = {
-    val nbrs = Array.tabulate(b.dst.length)(i => Neighbor(b.dst(i), b.sim(i))).toSeq
-    TopKResult(nbrs, b.old.toSeq, b.old.count(!_))
-  }
+  override def finish(b: TopKBuf): Seq[Neighbor] =
+    Array.tabulate(b.dst.length)(i => Neighbor(b.dst(i), b.sim(i))).toSeq
 
   override def bufferEncoder: Encoder[TopKBuf] = Encoders.product[TopKBuf]
-  override def outputEncoder: Encoder[TopKResult] = Encoders.product[TopKResult]
+  override def outputEncoder: Encoder[Seq[Neighbor]] = ExpressionEncoder[Seq[Neighbor]]()
 }
 
 object TopKAggregator {
@@ -80,14 +83,12 @@ object TopKAggregator {
 
   /** A merge task's top-K lists: [[partialTopK]] over the entries of
     * every `(src, buffer)` row it reads, whatever their order and
-    * however a source's entries are split across rows; entries that
-    * were not old are new. */
-  private[nnd] def mergeTopK(k: Int)(bufs: Iterator[(Long, TopKBuf)]): Iterator[FlaggedList] =
+    * however a source's entries are split across rows. A row need not be
+    * sorted, deduplicated or K wide: every entry is folded. */
+  private[nnd] def mergeTopK(k: Int)(bufs: Iterator[(Long, TopKBuf)]): Iterator[(Long, TopKBuf)] =
     partialTopK(k)(bufs.flatMap { case (src, b) =>
       b.dst.indices.iterator.map(i => Cand(src, b.dst(i), b.sim(i), b.old(i)))
-    }).map { case (src, b) =>
-      FlaggedList(src, b.dst.indices.map(i => Neighbor(b.dst(i), b.sim(i))), b.old.toSeq.map(!_))
-    }
+    })
 }
 
 /** One source's top-K buffer, mutable and primitive: the one top-K

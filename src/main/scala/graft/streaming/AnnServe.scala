@@ -76,7 +76,7 @@ object AnnServe {
       // flatten the bounded lists to the batch search's row shape.
       drained
         .select(col("query_id"),
-          posexplode(col("topk.neighbors")).as(Seq("pos", "nbr")))
+          posexplode(col("topk")).as(Seq("pos", "nbr")))
         .select(col("query_id"), (col("pos") + 1).as("rank"),
           col("nbr.id").as("nbr_id"), col("nbr.similarity").as("cosine"))
     } finally {

@@ -131,20 +131,32 @@ class PlanSpec extends SparkSpec {
         .select(col("vec_id").as("id"), col("embedding").as("features"))
       graft.nnd.NND.buildGraph(emb, graft.nnd.NND.Params(k = 5, maxIterations = 1)).count()
     }
-    // A merge plan reads the per-task top-k fold, whose rows are
-    // (src, buffer) tuples; the merge is everything above that fold.
+    // A merge plan exchanges (src, buffer) rows by source; the merge is
+    // everything above that exchange, and its input everything below.
+    // Top-k folds, the merge's own and the per-task ones, emit those
+    // rows as tuples.
+    val exchange = "Exchange hashpartitioning(_1"
     val fold = "MapPartitions .*obj#\\d+: scala\\.Tuple2".r
-    val merges = plans.map(_.split("== Initial Plan ==").head.split("\n"))
-      .filter(_.exists(fold.findFirstIn(_).isDefined))
-      .map(lines => lines.takeWhile(fold.findFirstIn(_).isEmpty).mkString("\n"))
+    // AQE prints the final and the initial plan, and so does each cached
+    // table's plan nested in it; audit the outer final one.
+    val merges = plans.map(_.split("\n\\+- == Initial Plan ==").head.split("\n"))
+      .filter(_.exists(_.contains(exchange)))
+      .map(_.span(!_.contains(exchange)))
     // One merge for the init draws, one for iteration 1.
-    assert(merges.size == 2, s"expected 2 merge plans, got:\n${merges.mkString("\n---\n")}")
-    merges.foreach { m =>
+    assert(merges.size == 2, s"expected 2 merge plans, got:\n" +
+      merges.map { case (m, in) => (m ++ in).mkString("\n") }.mkString("\n---\n"))
+    merges.foreach { case (above, below) =>
+      val m = (above :+ below.head).mkString("\n")
       Seq("ObjectHashAggregate", "SortAggregate", "Sort [").foreach { op =>
         assert(!m.contains(op), s"the merge plans $op:\n$m")
       }
-      assert(m.contains("Exchange hashpartitioning(_1"),
-        s"the merge does not exchange the buffers by source:\n$m")
+      assert(m.contains(exchange) && fold.findFirstIn(m).isDefined,
+        s"the merge does not exchange the buffers by source into the slot fold:\n$m")
+      // Old lists enter as they are: the fold below the exchange is the
+      // fresh candidates' only (the init draws', or the local join's).
+      val in = below.mkString("\n")
+      assert(fold.findAllIn(in).size == 1,
+        s"expected exactly one top-k fold below the merge's exchange:\n$in")
     }
   }
 

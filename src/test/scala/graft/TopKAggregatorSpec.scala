@@ -18,8 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * NND does not use Spark's partial aggregation. Its local-join task
   * folds candidates into a slot map (`TopKAggregator.partialTopK`), and
   * its merge exchanges those buffers by source into the same fold
-  * (`TopKAggregator.mergeTopK`). Both are checked against the same
-  * reference and bit for bit against `reduce`.
+  * (`TopKAggregator.mergeTopK`). Old lists reach `mergeTopK` raw, as
+  * they are, exactly as "an unsorted, duplicated old list…" feeds them:
+  * the fold, not the caller, sorts, dedups and truncates them. Both
+  * folds are checked against the same reference and bit for bit
+  * against `reduce`.
   */
 class TopKAggregatorSpec extends AnyFunSuite {
 
@@ -66,13 +69,9 @@ class TopKAggregatorSpec extends AnyFunSuite {
     case Seq((_, b)) => b
   }
 
-  /** One merge task's lists of `rows`, as NND makes them, back in
-    * buffer form (an entry that is not new is old). */
+  /** One merge task's lists of `rows`, as NND makes them. */
   private def merged(rows: Seq[(Long, TopKBuf)]): Seq[(Long, TopKBuf)] =
-    TopKAggregator.mergeTopK(K)(rows.iterator).map { l =>
-      (l.id, TopKBuf(l.neighbors.map(_.id).toArray, l.neighbors.map(_.similarity).toArray,
-        l.isNew.map(!_).toArray))
-    }.toSeq
+    TopKAggregator.mergeTopK(K)(rows.iterator).toSeq
 
   private def canon(b: TopKBuf): (Seq[Long], Seq[Double], Seq[Boolean]) =
     (b.dst.toSeq, b.sim.toSeq, b.old.toSeq)
