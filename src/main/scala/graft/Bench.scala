@@ -83,10 +83,14 @@ object Bench {
   /** Warm the JIT/codegen paths so the first measured query isn't
     * charged session bring-up — once for the relational path, once for
     * the NND iteration machinery (whose generated code dominates the
-    * run-to-run variance of n01/s03 when cold). Shared with TimeQuery,
-    * like [[session]]. */
+    * run-to-run variance of n01/s03 when cold). A directory without
+    * `lineitem.parquet` (a ScaleGen tier holds embeddings only) skips the
+    * relational half. Shared with TimeQuery, like [[session]]. */
   private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
-    try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
+    val lineitem = new org.apache.hadoop.fs.Path(sfDir, "lineitem.parquet")
+    if (!lineitem.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lineitem))
+      System.err.println(s"[bench] warm-up: no $lineitem, skipping the q01 half")
+    else try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
     catch { case e: Throwable =>
       System.err.println(s"[bench] warm-up failed: $e")
     }

@@ -3,13 +3,14 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Neighbor-list assembly shared by every path that rebuilds an
-  * adjacency array outside [[graft.nnd.TopKAggregator]] (the purge
-  * regroup in `NND.updateGraph`, the appended lists in
-  * `GraphSearch.appendedLists`): sort by (similarity desc, id asc) —
-  * the aggregator's merge order — so list ordering is bit-identical
-  * across the build, purge, and append paths BY CONSTRUCTION rather
-  * than by kept-in-sync copies of the sort_array/struct idiom. */
+/** Neighbor-list assembly shared by the graph-search paths that
+  * rebuild an adjacency array in SQL (the appended lists in
+  * `GraphSearch.appendedLists`, the reverse-edge patch in
+  * `GraphSearch.appendToGraphStack`): sort by (similarity desc, id
+  * asc) — the order of NND's top-k fold, which builds every NND list
+  * itself — so list ordering is bit-identical across the build and
+  * append paths BY CONSTRUCTION rather than by kept-in-sync copies of
+  * the sort_array/struct idiom. */
 object Neighbors {
 
   /** Group `rows` by `id` into `(id, neighbors ARRAY<STRUCT<id,

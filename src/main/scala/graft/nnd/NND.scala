@@ -188,12 +188,15 @@ object NND {
     *
     * Finished-point semantics: a point newly marked `finished = true`
     * gets null neighbors for its OWN row, AND entries referencing it
-    * inside other nodes' pre-existing lists are purged up front (one
-    * narrow edge-table filter with a carve-out — only lists actually
-    * holding a finished neighbor regroup; the subtree folds away
-    * entirely when nothing is finished), so retirement cannot
-    * resurface via old candidates. A purged hole refills when NN-
-    * descent touches that list; a list emptied entirely re-enters as
+    * inside other nodes' prior lists are purged up front, so retirement
+    * cannot resurface via old candidates. The purge refolds every
+    * prior list of the input through the one list builder
+    * ([[listsFrom]]) — and only when finished rows exist; with none,
+    * prior lists pass as they are. A refolded list comes back sorted,
+    * deduplicated and at most k' wide, which changes nothing for a
+    * [[buildGraph]] or [[updateGraph]] output but normalizes a caller's
+    * unsorted, duplicated or wider list. A purged hole refills when
+    * NN-descent touches that list; a list emptied entirely re-enters as
     * a new point. EdgeCasesSpec pins the retire-between-build-and-
     * update case. */
   def updateGraph(input: DataFrame, existing: DataFrame, p: Params = Params()): DataFrame = {
@@ -204,65 +207,32 @@ object NND {
     val counts = partitionCounts(nodes)
     if (counts.isEmpty) return reassemble(base, nodes, p, None)
 
-    // Prior lists (all-old flags); ids absent here are the increment.
-    val priorListsRaw = listsOf(existing)
-
+    // Prior lists; this input's ids without one are the increment.
+    val priorLists = listsOf(existing)
+    val inputLists = priorLists.join(nodes.toDF().select($"id"), Seq("id"), "left_semi")
     // Finished-point purge: a point marked `finished` in THIS update's
-    // input gets null neighbors for its own row (it is absent from
-    // `nodes`), but entries referencing it inside other nodes' prior
-    // lists must also go — stable lists pass through verbatim and
-    // re-merged lists re-admit old candidates, so without this filter
-    // retirement silently resurfaces. Carve-out shape: one narrow
-    // explode locates the affected lists (left_semi on the finished
-    // set), only those regroup (sim desc, id asc — the TopKAggregator
-    // order); everyone else passes by anti-join untouched. In the
-    // common no-finished-column case the filter below folds to an
-    // empty relation and Catalyst's PropagateEmptyRelation deletes
-    // the whole purge subtree at plan time. A list whose every entry
-    // was purged drops out of the prior set entirely and re-enters as
-    // a NEW point (fresh init draws) — its old list carried no
-    // surviving information.
-    // The purge is built ONLY when the input actually carries finished
-    // rows: with a finished column present but empty, `finishedIds`
-    // is only empty at RUNTIME (not constant-folded), so the purge
-    // subtree (edge explode + two joins + regroup) would re-execute
-    // for every priorLists consumer — exactly the repetition the
-    // truncate exists to prevent, paid for nothing. The one eager
-    // isEmpty scan below runs only when a finished column exists (the
-    // common append input has none and skips it via the &&).
-    val hasFinished = input.columns.contains("finished") &&
-      !base.filter(col("finished")).isEmpty
-    val priorLists: Dataset[NeighborList] =
-      if (!hasFinished) priorListsRaw.as[NeighborList]
-      else {
-        val finishedIds = base.filter(col("finished"))
-          .select(col("id").cast("long").as("fid"))
-        val priorEdges = priorListsRaw
-          .select(col("id"), explode(col("neighbors")).as("nb"))
-        val purgeAffected = priorEdges
-          .join(finishedIds, col("nb.id") === col("fid"), "left_semi")
-          .select(col("id")).distinct()
-        val purgedLists = graft.core.Neighbors.assemble(
-          priorEdges
-            .join(purgeAffected, Seq("id"), "left_semi")
-            .join(finishedIds, col("nb.id") === col("fid"), "left_anti"),
-          col("id"), col("nb.id"), col("nb.similarity"))
-        // The purge subtree feeds every priorLists consumer (stable
-        // init, newIds anti-join, the per-iteration old-candidate
-        // reads via stable) — truncate it once.
-        truncate(priorListsRaw
-          .join(purgeAffected, Seq("id"), "left_anti")
-          .unionByName(purgedLists)
-          .as[NeighborList], p.checkpointDir)
-      }
+    // input is absent from `nodes`, but entries referencing it inside
+    // other nodes' prior lists must also go — stable lists pass through
+    // verbatim and re-merged lists re-admit old candidates, so without
+    // this filter retirement silently resurfaces. The prior entries
+    // minus the finished ones fold back into lists, all old; a list
+    // whose every entry was purged drops out and re-enters as a NEW
+    // point (fresh init draws) — its old list carried no surviving
+    // information. The purge runs only when the input carries finished
+    // rows: the one eager isEmpty scan runs only when a finished column
+    // exists (the common append input has none and skips it via the &&).
+    val finishedIds = base.filter(col("finished")).select(col("id").cast("long").as("dst"))
+    val purged = Option.when(input.columns.contains("finished") && !finishedIds.isEmpty)(
+      listsFrom(entriesOf(inputLists).join(finishedIds, Seq("dst"), "left_anti")
+        .withColumn("isOld", lit(true)).as[Cand], p))
     val newIds = nodes.toDF().select($"id")
-      .join(priorLists.toDF().select($"id"), Seq("id"), "left_anti")
+      .join(purged.fold(priorLists)(_.toDF("id", "b")).select($"id"), Seq("id"), "left_anti")
     val newCount = newIds.count()
     // All new: no prior list survives, so nothing is stable and the
     // update is a build (dense body, every bucket, every member draws).
     val increment = if (newCount == counts.values.sum) None else Some(newIds)
-    val stable = increment.map(_ => stableOf(
-      priorLists.toDF().join(nodes.toDF().select($"id"), Seq("id"), "left_semi"), p))
+    if (increment.isEmpty) purged.foreach(release)
+    val stable = increment.map(_ => purged.getOrElse(stableOf(inputLists, p)))
     reassemble(base, nodes, p, Some(refineLoop(nodes, stable,
       initLists(nodes, counts, increment, p), math.max(1L, newCount), p)))
   }
@@ -401,22 +371,21 @@ object NND {
 
           // Re-merge ONLY nodes that received candidates; everyone else's
           // list is carried untouched via semi/anti joins on the
-          // (typically increment-sized) target set.
+          // (typically increment-sized) target set. Untouched actives
+          // have been fully exploited, so every prior list is all old:
+          // the untouched ones retire to stable with flags dropped, and
+          // stable loses any node the merge re-emits.
           val targets = pairBufs.select($"_1").distinct()
-          def byTargets(lists: Dataset[(Long, TopKBuf)], how: String): Dataset[(Long, TopKBuf)] =
-            lists.join(targets, Seq("_1"), how).as[(Long, TopKBuf)]
-          val oldBufs = byTargets(st, "left_semi").union(byTargets(active, "left_semi")).map(allOld)
-
-          // Untouched actives have been fully exploited — retire to stable
-          // with flags dropped; stable loses any node the merge re-emitted.
-          val retired = byTargets(active, "left_anti").map(allOld)
+          val prior = st.union(active.map(allOld))
+          def byTargets(how: String): Dataset[(Long, TopKBuf)] =
+            prior.join(targets, Seq("_1"), how).as[(Long, TopKBuf)]
           // The merge and the stable-set rebuild read only the ALREADY
           // materialized pairBufs/stable/active checkpoints and are
           // independent of each other — overlap their truncation jobs
           // (guide §2.6; per-frame contents unchanged).
           val (m, newStable) = graft.core.Par.pair(
-            truncate(mergeBuffers(pairBufs.union(oldBufs), k), p.checkpointDir),
-            truncate(byTargets(st, "left_anti").union(retired), p.checkpointDir))
+            truncate(mergeBuffers(pairBufs.union(byTargets("left_semi")), k), p.checkpointDir),
+            truncate(byTargets("left_anti"), p.checkpointDir))
           stable = Some(newStable)
           (m, Seq(st, pairBufs, exchanged))
       }
@@ -478,36 +447,26 @@ object NND {
 
     // Carve-out before any wide work: a list is ACTIVE iff its owner
     // is in the batch or it holds an entry referencing the batch (a
-    // reverse-patch arrival). The membership probe explodes ONLY the
-    // narrow (id, nb.id) projection; every other list passes to
-    // stable with all-old flags and is never regrouped.
-    val activeIds = lists.select(col("id"), explode(col("neighbors.id")).as("nbid"))
-      .join(fresh.select(col("id").as("nbid")), Seq("nbid"), "left_semi")
-      .select("id").distinct()
+    // reverse-patch arrival). Every other list passes to stable with
+    // all-old flags and is never regrouped.
+    val activeIds = entriesOf(lists).join(fresh.select(col("id").as("dst")), Seq("dst"), "left_semi")
+      .select(col("src").as("id")).distinct()
       .unionByName(lists.select("id").join(fresh, Seq("id"), "left_semi"))
       .distinct()
     val stable0 = stableOf(lists.join(activeIds, Seq("id"), "left_anti"), p)
 
-    // Per-entry fresh flags for the active lists, order-preserving
-    // (posexplode + sort-by-pos regroup keeps the stored
-    // (sim desc, id asc) list order bit-exact).
-    val active0: Dataset[(Long, TopKBuf)] = truncate(
-      lists.join(activeIds, Seq("id"), "left_semi")
-        .join(fresh.withColumn("owner_fresh", lit(true)), Seq("id"), "left_outer")
-        .withColumn("owner_fresh", coalesce(col("owner_fresh"), lit(false)))
-        .select(col("id"), col("owner_fresh"),
-          posexplode(col("neighbors")).as(Seq("pos", "nb")))
-        .join(fresh.select(col("id").as("fid")).withColumn("e_fresh", lit(true)),
-          col("nb.id") === col("fid"), "left_outer")
-        .select(col("id"), col("pos"), col("nb"),
-          (col("owner_fresh") || coalesce(col("e_fresh"), lit(false))).as("fresh"))
-        .as[(Long, Int, Neighbor, Boolean)]
-        .groupByKey(_._1)
-        .mapGroups { (id, it) =>
-          val rows = it.toArray.sortBy(_._2)
-          (id, TopKBuf(rows.map(_._3.id), rows.map(_._3.similarity), rows.map(!_._4)))
-        },
-      p.checkpointDir)
+    // The active lists' entries, each flagged fresh when its owner or
+    // its target is in the batch, fold back into lists through the one
+    // list builder. A refolded list comes back sorted, deduplicated and
+    // at most k' wide: unchanged for an appendToGraphStack layer,
+    // normalized for a caller's unsorted, duplicated or wider list.
+    def isFresh(c: String) = fresh.select(col("id").as(c), lit(true).as(s"${c}Fresh"))
+    val active0 = listsFrom(entriesOf(lists.join(activeIds, Seq("id"), "left_semi"))
+      .join(isFresh("src"), Seq("src"), "left_outer")
+      .join(isFresh("dst"), Seq("dst"), "left_outer")
+      .select(col("src"), col("dst"), col("sim"),
+        (!coalesce(col("srcFresh") || col("dstFresh"), lit(false))).as("isOld"))
+      .as[Cand], p)
 
     reassemble(base, nodes, p,
       Some(refineLoop(nodes, Some(stable0), active0, newCount, p)))
@@ -542,6 +501,11 @@ object NND {
   private def listsOf(graph: DataFrame): DataFrame = graph
     .select(col("id").cast("long").as("id"), col("neighbors").cast(ListType).as("neighbors"))
     .filter(col("neighbors").isNotNull)
+
+  /** A graph's list entries as `(src, dst, sim)` rows. */
+  private def entriesOf(lists: DataFrame): DataFrame = lists
+    .select(col("id").as("src"), explode(col("neighbors")).as("nb"))
+    .select(col("src"), col("nb.id").as("dst"), col("nb.similarity").as("sim"))
 
   /** Per-logical-partition counts: cardinality = number of logical
     * partitions (small by construction), so a driver map + broadcast is
@@ -624,7 +588,17 @@ object NND {
             case (b, id, f, part, fresh) => (BucketedNode(b, id, f, part), fresh)
           }, k))
     }
-    truncate(mergeBuffers(partials(initCands, k), k), p.checkpointDir)
+    listsFrom(initCands, p)
+  }
+
+  /** THE list builder: a candidate stream folded into top-k' lists
+    * ([[partials]], then [[mergeBuffers]]), truncated. The init draws,
+    * the finished purge's surviving entries and consolidation's active
+    * entries all become lists through it; the fold sorts, dedups and
+    * truncates whatever it reads. */
+  private def listsFrom(cands: Dataset[Cand], p: Params): Dataset[(Long, TopKBuf)] = {
+    val k = buildWidth(p)
+    truncate(mergeBuffers(partials(cands, k), k), p.checkpointDir)
   }
 
   /** Final reassembly (reference J1 left outer join, NND.scala:274-278),
@@ -651,8 +625,8 @@ object NND {
     * map-side half of the reference's `reduceByKey` combine. Placed
     * directly on the `Cand` producer (a group function, a flatMap), so
     * the candidates pass to the fold as objects and are never encoded.
-    * Only fresh candidates need it: old lists are buffers already and
-    * enter [[mergeBuffers]] as they are. */
+    * The loop's old lists are buffers already and enter [[mergeBuffers]]
+    * as they are. */
   private def partials(cands: Dataset[Cand], k: Int): Dataset[(Long, TopKBuf)] = {
     import cands.sparkSession.implicits._
     cands.mapPartitions(it => TopKAggregator.partialTopK(k)(it))

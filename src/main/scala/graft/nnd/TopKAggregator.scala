@@ -97,8 +97,8 @@ object TopKAggregator {
   * l2sim paths have no cosine_ranked-style guard) makes every primitive
   * comparison false, which would break the order and let duplicates
   * escape dedup. Under compare's IEEE total order NaN sorts as the
-  * LARGEST value (first in the list, matching Spark's own sort order
-  * and Neighbors.assemble), so corrupt input yields a deterministic,
+  * LARGEST value (first in the list, matching Spark's own descending
+  * sort order), so corrupt input yields a deterministic,
   * structurally valid list. Sims here are 1/(1+d) or -Inf — never -0.0
   * — so compare agrees with the primitive ops on every valid input.
   * Dedup: an equal (sim, dst) ORs its old flag into the kept copy. Any

@@ -252,6 +252,30 @@ class EdgeCasesSpec extends SparkSpec {
       .select(explode(col("neighbors")).as("nb"))
       .filter(col("nb.id") === 7L).count()
     assert(stale == 0, s"$stale lists still reference the retired point")
+    // No point is new, so nothing refines: every list is exactly its
+    // prior list minus point 7, in the prior (similarity desc, id asc)
+    // order — ties included, since the points lie on a line.
+    def lists(df: org.apache.spark.sql.DataFrame) = df.select("id", "neighbors").collect()
+      .map(r => r.getLong(0) -> Option(r.getSeq[Row](1)).map(_.map(n => (n.getLong(0), n.getDouble(1)))))
+      .toMap
+    val (prior, purged) = (lists(built), lists(updated))
+    (0L until 20L).filter(_ != 7L).foreach { id =>
+      assert(purged(id) == prior(id).map(_.filterNot(_._1 == 7L)),
+        s"list of $id: prior ${prior(id)}, purged ${purged(id)}")
+    }
+    // A list holding only point 7 is emptied by the purge: point 0
+    // re-enters as a new point and gets a fresh, non-empty list.
+    val onlySeven = built.select("id", "neighbors").filter(col("id") =!= 0L).unionByName(
+      Seq((0L, Seq((7L, 1.0 / (1 + 7))))).toDF("id", "neighbors") // 1/(1 + L2)
+        .select(col("id"), transform(col("neighbors"),
+          x => struct(x("_1").as("id"), x("_2").as("similarity"))).as("neighbors")))
+    val refilled = lists(NND.updateGraph(
+      pts.toDF("id", "features").withColumn("finished", col("id") === 7L),
+      onlySeven, NND.Params(k = 4, maxIterations = 2)))
+    assert(refilled(0L).exists(l => l.nonEmpty && !l.exists(_._1 == 7L)),
+      s"an emptied list must come back as a new point's non-empty list, got ${refilled(0L)}")
+    assert(refilled.values.flatten.forall(!_.exists(_._1 == 7L)),
+      "no list may still reference the retired point")
   }
 
   test("unigramLogProb: empty corpus yields an empty frame, not a crash") {

@@ -332,12 +332,22 @@ class NNDSpec extends SparkSpec {
     val built = NND.buildGraph(embeddings.filter(col("id") % 5 =!= 0),
       NND.Params(k = K, maxIterations = 2)).select("id", "neighbors")
     built.collect()
+    // The points built leaves out, appended by beam search once and
+    // consolidated under each join strategy.
+    val batch = embeddings.filter(col("id") % 5 === 0).select("id")
+    val appended = graft.ops.GraphSearch.appendToGraph(built,
+      embeddings.select("id", "features"), embeddings.join(batch, "id"), k = K).localCheckpoint()
     def calls(): Seq[Map[Long, Option[Seq[(Long, Double)]]]] = Seq(
       released("buildGraph")(NND.buildGraph(embeddings, NND.Params(k = K, maxIterations = 2))),
       released("updateGraph")(
         NND.updateGraph(embeddings, built, NND.Params(k = K, maxIterations = 2))),
       released("pruned buildGraph")(NND.buildGraph(embeddings,
-        NND.Params(k = K, maxIterations = 2, pruneAlpha = Some(1.2), pruneMaxDegree = 12))))
+        NND.Params(k = K, maxIterations = 2, pruneAlpha = Some(1.2), pruneMaxDegree = 12))),
+      released("updateGraph with finished rows")(NND.updateGraph(
+        embeddings.withColumn("finished", col("id") % 7 === 3), built,
+        NND.Params(k = K, maxIterations = 2))),
+      released("consolidateGraph")(NND.consolidateGraph(embeddings, appended, batch,
+        NND.Params(k = K, maxIterations = 2))))
     val broadcastJoins = calls()
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
@@ -348,7 +358,8 @@ class NNDSpec extends SparkSpec {
         spark.conf.set(key, "-1")
         calls()
       } finally spark.conf.set(key, prev)
-    Seq("buildGraph", "updateGraph", "pruned buildGraph").zipWithIndex.foreach { case (name, i) =>
+    Seq("buildGraph", "updateGraph", "pruned buildGraph", "updateGraph with finished rows",
+        "consolidateGraph").zipWithIndex.foreach { case (name, i) =>
       assert(sortMergeJoins(i) == broadcastJoins(i), s"$name depends on the join strategy")
     }
   }

@@ -10,6 +10,24 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
+  /** The final plan of a plan string, with every `+- == Initial Plan ==`
+    * section cut out. AQE prints the final and the initial plan, and so
+    * does each cached table's plan nested in it: cutting the string at
+    * its first marker, a nested table's, would drop the rest of the
+    * outer final plan, and keeping a nested initial section would count
+    * its operators twice. A section ends at the first tree edge (`+- `
+    * or `:- `) that is not indented past its marker; lines that are not
+    * edges, such as a multi-line literal's, end nothing. */
+  private def finalPlan(p: String): String = {
+    val edge = "^[ :]*?[+:]- ".r
+    p.split("\n").foldLeft((Vector.empty[String], -1)) { case ((kept, cut), l) =>
+      val at = edge.findPrefixOf(l).map(_.length - 3)
+      if (cut >= 0 && at.forall(_ > cut)) (kept, cut)
+      else if (at.exists(l.startsWith("+- == Initial Plan ==", _))) (kept, at.get)
+      else (kept :+ l, -1)
+    }._1.mkString("\n")
+  }
+
   /** Runs `body` with a QueryExecutionListener attached and returns
     * every executed plan it produced. The listener rides the async
     * shared bus, so after `body` returns we drain the bus via
@@ -101,8 +119,7 @@ class PlanSpec extends SparkSpec {
         .select(col("vec_id").as("id"), col("embedding").as("features"))
       graft.nnd.NND.buildGraph(emb, graft.nnd.NND.Params(k = 5, maxIterations = 1)).count()
     }
-    // AQE prints the final and the initial plan; audit the final one.
-    val fin = plans.map(_.split("== Initial Plan ==").head)
+    val fin = plans.map(finalPlan)
     val localJoin = fin.filter(p => p.contains("MapGroups") && p.contains("isNew") &&
       p.contains("hashpartitioning(src"))
     assert(localJoin.nonEmpty, s"no local-join plan captured:\n${fin.mkString("\n---\n")}")
@@ -137,9 +154,7 @@ class PlanSpec extends SparkSpec {
     // rows as tuples.
     val exchange = "Exchange hashpartitioning(_1"
     val fold = "MapPartitions .*obj#\\d+: scala\\.Tuple2".r
-    // AQE prints the final and the initial plan, and so does each cached
-    // table's plan nested in it; audit the outer final one.
-    val merges = plans.map(_.split("\n\\+- == Initial Plan ==").head.split("\n"))
+    val merges = plans.map(finalPlan(_).split("\n"))
       .filter(_.exists(_.contains(exchange)))
       .map(_.span(!_.contains(exchange)))
     // One merge for the init draws, one for iteration 1.
@@ -223,11 +238,8 @@ class PlanSpec extends SparkSpec {
       val raw = searchPlan(
         spark.read.parquet(s"$sf0001/embeddings.parquet")
           .select(col("vec_id").as("id"), col("embedding").as("features")))
-      // AQE's plan string prints the Final AND Initial plans; count
-      // exchanges in the final (executed) section only.
       def nNodeExchanges(p: String): Int =
-        "Exchange hashpartitioning\\(node".r
-          .findAllIn(p.split("== Initial Plan ==").head).size
+        "Exchange hashpartitioning\\(node".r.findAllIn(finalPlan(p)).size
       assert(bucketed.contains("Bucketed: true"),
         s"features scan not bucket-aware:\n$bucketed")
       assert(nNodeExchanges(bucketed) == nNodeExchanges(raw) - 1,
@@ -340,10 +352,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("d22: per-URL dedup shuffles once, on the canonical URL key") {
-    // AQE renders the final AND the initial plan in one string; count
-    // exchanges in the final-plan section only.
     val p = plan("d22_url_dedup")
-    val fin = p.split("== Initial Plan ==")(0)
+    val fin = finalPlan(p)
     assert(fin.contains("Exchange hashpartitioning(norm_url"),
       s"d22 must group on norm_url:\n$p")
     assert(fin.split("Exchange hashpartitioning").length - 1 == 1,
@@ -361,8 +371,7 @@ class PlanSpec extends SparkSpec {
     val df = graft.ops.Decontaminate
       .semanticOverlap(corpus, bench, "id", "features", 0.9)
     df.collect()
-    val fin = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val fin = finalPlan(df.queryExecution.executedPlan.toString)
     assert(fin.contains("BroadcastHashJoin"),
       s"bench probes must broadcast-join:\n$fin")
     assert(!fin.contains("SortMergeJoin") && !fin.contains("CartesianProduct"),
@@ -375,8 +384,7 @@ class PlanSpec extends SparkSpec {
 
   test("t50: rank-table lookups stay codegen'd — no UDF, no cartesian, " +
       "map-side combine on the per-query aggs") {
-    val p = plan("t50_ranked_eval")
-    val fin = p.split("== Initial Plan ==")(0)
+    val fin = finalPlan(plan("t50_ranked_eval"))
     assert(!fin.contains("ScalaUDF") && !fin.contains("BatchEvalPython"),
       s"t50 fell out of codegen'd built-ins:\n$fin")
     assert(!fin.contains("CartesianProduct"), s"t50 planned a cartesian:\n$fin")
@@ -385,8 +393,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("m08: WARC serialize+parse+census shuffles once, on the segment key") {
-    val p = plan("m08_warc_census")
-    val fin = p.split("== Initial Plan ==")(0)
+    val fin = finalPlan(plan("m08_warc_census"))
     // The parse itself is a mapPartitions projection — the only
     // content shuffles are buildFiles' per-segment groupBy and the
     // census's count_distinct rewrite (Expand + one record-stream
@@ -438,10 +445,8 @@ class PlanSpec extends SparkSpec {
       !p.contains("BroadcastHashJoin"),
       s"quantile threshold planned as a join instead of a window:\n$p")
     // One shuffle on source for the window family; the rank and both
-    // window aggregates share it. Under AQE the explain repeats the
-    // plan ("Final"/"Initial"), so count only the final section.
-    val finalPlan = p.split("== Initial Plan ==")(0)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(finalPlan).size
+    // window aggregates share it.
+    val exchanges = "Exchange hashpartitioning".r.findAllIn(finalPlan(p)).size
     assert(exchanges == 1, s"expected exactly 1 group exchange, got $exchanges:\n$p")
   }
 
@@ -592,9 +597,7 @@ class PlanSpec extends SparkSpec {
     // One scan computing per-doc integers inside the projection, then
     // ONE partial-agg'd groupBy on lang: a second exchange or any join
     // would mean per-doc rows moved for a languages-sized answer.
-    // Count in the FINAL adaptive plan only — the plan string echoes
-    // the pre-AQE "Initial Plan" section, which repeats the exchange.
-    val p = plan("t53_fertility").split("== Initial Plan ==").head
+    val p = finalPlan(plan("t53_fertility"))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges == 1, s"expected exactly 1 exchange, got $exchanges:\n$p")
     assert(!p.contains("Join"), s"fertility census joined:\n$p")
